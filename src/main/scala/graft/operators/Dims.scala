@@ -10,10 +10,13 @@ import org.apache.spark.sql.functions._
   * natural-key ordering — stable, dense, reproducible (the reference's
   * IDENTITY only guarantees key *semantics*, not values). The unpartitioned
   * window funnels the dim through one task, which is correct for conformed
-  * dims (ship modes, categories, geographies — small by definition). So a
-  * caller can't pick the single-task plan by accident on a huge dim,
-  * [[buildDim]] probes the distinct-key count and dispatches to
-  * [[buildDimDistributed]] above a configurable threshold.
+  * dims (ship modes, categories, geographies — small by definition).
+  * [[buildDim]] and [[insertOnlyMerge]] are lazy (they run no Spark job),
+  * and joining a dim into a fact is a plain join — Spark's planner
+  * broadcasts it under `spark.sql.autoBroadcastJoinThreshold` and AQE
+  * converts the join at run time from observed sizes. A dim too large for
+  * one window task uses the explicit at-scale twins,
+  * [[buildDimDistributed]] and [[insertOnlyMergeDistributed]].
   */
 object Dims {
 
@@ -23,62 +26,12 @@ object Dims {
     * this. */
   private def qcol(n: String) = col(s"`$n`")
 
-  /** Conf key: row count above which [[broadcastIfSmall]] withholds the
-    * broadcast hint and lets the planner's size estimate pick the join
-    * strategy (sort-merge at scale). An unconditional `broadcast(dim)`
-    * bypasses Spark's size check entirely — correct at reference
-    * cardinality (hundreds to thousands of rows) but an OOM at 100× with
-    * a wide SCD2 dim; the guarded hint keeps the fast plan where it is
-    * safe and degrades to the planner's choice where it is not. */
-  val MaxBroadcastDimRowsKey = "spark.graft.dims.maxBroadcastDimRows"
-  val DefaultMaxBroadcastDimRows: Long = 1000000L
-
-  /** Broadcast hint gated by a bounded row probe — the guarded twin of a
-    * bare `broadcast(dim)`: count at most cap+1 rows once, then hint the
-    * dim itself under the cap and return it UN-hinted above it.
-    * Output-identical either way — only the physical join strategy
-    * differs. The probe deliberately does NOT persist: every mart/fact
-    * build goes through here, and a cached probe returned on the common
-    * small-dim path is never unpersisted, accumulating one pinned copy
-    * per call for the session's lifetime. Re-computing a ≤cap-row dim
-    * once at join time is cheaper than that leak. */
-  def broadcastIfSmall(dim: DataFrame): DataFrame = {
-    val cap = dim.sparkSession.conf
-      .get(MaxBroadcastDimRowsKey, DefaultMaxBroadcastDimRows.toString).toLong
-    val probe = math.min(cap + 1, Int.MaxValue.toLong).toInt
-    if (dim.limit(probe).count() > cap) dim else broadcast(dim)
-  }
-
-  /** Conf key: distinct-key count above which [[buildDim]] dispatches to
-    * [[buildDimDistributed]] instead of the single-task global window.
-    * 1M keys through one window task is the upper edge of comfortable;
-    * real conformed dims sit orders of magnitude below it. */
-  val MaxSingleTaskKeysKey = "spark.graft.dims.maxSingleTaskKeys"
-  val DefaultMaxSingleTaskKeys: Long = 1000000L
-
-  /** A1: distinct natural keys + dense deterministic surrogate key.
-    * Size-dispatching: the distinct-key probe short-circuits at cap+1
-    * rows; above the cap the numbering routes to the partition-offset
-    * machinery of [[buildDimDistributed]] (output-identical, DimsSpec). */
-  def buildDim(src: DataFrame, naturalKey: Seq[String], keyCol: String): DataFrame = {
-    val d = src.select(naturalKey.map(qcol): _*).distinct()
-    val cap = src.sparkSession.conf
-      .get(MaxSingleTaskKeysKey, DefaultMaxSingleTaskKeys.toString).toLong
-    val probe = math.min(cap + 1, Int.MaxValue.toLong).toInt
-    // materialize the (bounded) probe once: when the dim fits under the
-    // cap the limited frame IS the complete distinct set, so the
-    // single-window path numbers the cached rows instead of re-running
-    // the distinct shuffle (the probe previously cost a second distinct).
-    // cache (not localCheckpoint): the over-cap path must RELEASE the
-    // probe rows, and an evicted re-compute is safe — under the cap the
-    // limit returns the complete (deterministic) set
-    val limited = d.limit(probe).cache()
-    if (limited.count() > cap) {
-      limited.unpersist(false)
-      buildDimDistributed(src, naturalKey, keyCol)
-    } else limited.withColumn(keyCol,
+  /** A1: distinct natural keys + dense deterministic surrogate key, numbered
+    * by one unpartitioned window (output-identical to
+    * [[buildDimDistributed]], DimsSpec). */
+  def buildDim(src: DataFrame, naturalKey: Seq[String], keyCol: String): DataFrame =
+    src.select(naturalKey.map(qcol): _*).distinct().withColumn(keyCol,
       row_number().over(Window.orderBy(naturalKey.map(qcol): _*)).cast("long"))
-  }
 
   /** Dense deterministic surrogate keys WITHOUT a single-task global
     * window — the at-scale IDENTITY replacement for dims too large for

@@ -440,7 +440,7 @@ object Scale {
     * one window partition — the usual keyed-window contract; raise
     * `buckets` or pre-spread if a single value dominates.
     *
-    * SIZE-DISPATCHED (the connectedComponents/buildDim discipline):
+    * SIZE-DISPATCHED (the connectedComponents discipline):
     * inputs at or under `smallInputMaxRows` take the plain one-shuffle
     * global window — a single sorted partition of ≤ that many rows beats
     * the telescoped plan's ~6 stages of job overhead. Above the cap (or

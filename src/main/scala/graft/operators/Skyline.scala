@@ -32,7 +32,7 @@ import org.apache.spark.sql.functions._
   * The step-4 window is a single task over the PRUNED set — fine while
   * the grid keeps survivors small (real measure distributions), but a
   * corpus whose frontier itself is huge funnels through it; same
-  * documented posture as `Dims.buildDim` below its dispatch cap.
+  * documented posture as `Dims.buildDim`'s single-window numbering.
   */
 object Skyline {
 

@@ -3,7 +3,7 @@ package graft.superstore
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-import graft.operators.{Dims, Quality, Windows}
+import graft.operators.{Quality, Windows}
 
 /** QA rules + the four analytical views + the two pivot marts
   * (SURVEY §2.2 P4, §2.5 W3-W5, §2.4 A5-A9; SQLproject1.sql:213-240,619-716
@@ -26,9 +26,9 @@ object Marts {
     * (SQLproject1.sql:628-638 — 30 fact rows, NOT 30 days; preserved). */
   def rolling30(fact: DataFrame, geography: DataFrame, date: DataFrame): DataFrame = {
     val joined = fact
-      .join(Dims.broadcastIfSmall(geography.select("geography_key", "region")), "geography_key")
-      .join(Dims.broadcastIfSmall(date.select(col("date_key").as("order_date_key"),
-        col("date"))), "order_date_key")
+      .join(geography.select("geography_key", "region"), "geography_key")
+      .join(date.select(col("date_key").as("order_date_key"), col("date")),
+        "order_date_key")
     Windows.rollingSum(
       Windows.rollingSum(joined, Seq(col("region")),
         Seq(col("date"), col("order_id"), col("order_line_no")),
@@ -56,9 +56,9 @@ object Marts {
                      date: DataFrame,
                      calendarRange: Boolean = false): DataFrame = {
     val daily = fact
-      .join(Dims.broadcastIfSmall(geography.select("geography_key", "region")), "geography_key")
-      .join(Dims.broadcastIfSmall(date.select(col("date_key").as("order_date_key"),
-        col("date"))), "order_date_key")
+      .join(geography.select("geography_key", "region"), "geography_key")
+      .join(date.select(col("date_key").as("order_date_key"), col("date")),
+        "order_date_key")
       .groupBy(col("region"), col("date"))
       .agg(sum(col("sales")).as("sales"), sum(col("profit")).as("profit"))
     val rolled =
@@ -81,8 +81,8 @@ object Marts {
     * (SQLproject1.sql:645-673). */
   def customerCohort(fact: DataFrame, date: DataFrame): DataFrame = {
     val withDate = fact
-      .join(Dims.broadcastIfSmall(date.select(col("date_key").as("order_date_key"),
-        col("date"))), "order_date_key")
+      .join(date.select(col("date_key").as("order_date_key"), col("date")),
+        "order_date_key")
       .select(col("customer_key"), col("date"))
     val first = withDate.groupBy("customer_key").agg(min("date").as("first_date"))
     val months = withDate
@@ -102,7 +102,7 @@ object Marts {
     * ties kept (SQLproject1.sql:689-699), plus share-of-subcategory-total. */
   def topProductsBySubCat(fact: DataFrame, product: DataFrame): DataFrame = {
     val profits = fact
-      .join(Dims.broadcastIfSmall(product.select("product_key", "product_name", "sub_category")),
+      .join(product.select("product_key", "product_name", "sub_category"),
         "product_key")
       .groupBy(col("sub_category"), col("product_name"))
       .agg(sum(col("profit")).as("total_profit"))

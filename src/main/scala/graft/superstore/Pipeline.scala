@@ -7,7 +7,10 @@ import graft.operators.{DateSpine, Dims}
 import graft.superstore.StarSchema.SuperstoreDims
 
 /** End-to-end Superstore ELT pipeline (SURVEY §3.1's 13-stage DAG as lazy
-  * DataFrames; the caller decides where to write/materialize).
+  * DataFrames; the caller decides where to write/materialize). Building
+  * the outputs runs no Spark job beyond reading the extract: [[run]] and
+  * [[runIncremental]] run only the CSV reader's first-line schema job, and
+  * [[runViaCatalog]]'s only eager work is the raw-table overwrite.
   *
   * Mirrors the reference script order: raw load -> typed staging -> dedup ->
   * QA -> date spine -> simple dims -> SCD2 dims -> fact -> views/marts.
@@ -26,26 +29,8 @@ object Pipeline {
     * parameter, never wall clock; None omits them. */
   def run(spark: SparkSession, csvPath: String,
           excelCompat: Boolean = false,
-          runTs: Option[String] = None): Outputs = {
-    val raw = Ingest.readRaw(spark, csvPath, excelCompat)
-    val staged = Staging.typed(raw)
-    // dedup output feeds every downstream consumer: cache it (S5 — the
-    // reference materializes #temp tables for the same reason)
-    val deduped = Staging.deduped(staged).cache()
-
-    val categoryDim = StarSchema.categoryDim(deduped)
-    val dims = SuperstoreDims(
-      date = StarSchema.dateDim(deduped),
-      shipMode = StarSchema.shipModeDim(deduped),
-      category = categoryDim,
-      subCategory = StarSchema.subCategoryDim(deduped, categoryDim),
-      geography = StarSchema.geographyDim(deduped),
-      customer = StarSchema.customerDim(deduped),
-      product = StarSchema.productDim(deduped))
-
-    val fact = StarSchema.salesFact(deduped, dims, runTs)
-    outputs(raw, staged, deduped, dims, fact, runTs)
-  }
+          runTs: Option[String] = None): Outputs =
+    fullLoad(Ingest.readRaw(spark, csvPath, excelCompat), runTs)
 
   /** [[run]] with the RAW layer as an addressable `graft_cat` TABLE read
     * through the `graftcsv` DSv2 source — the reference's raw layer is a
@@ -99,19 +84,7 @@ object Pipeline {
       .withColumn("ingested_at",
         runTs.map(t => to_timestamp(lit(t)))
           .getOrElse(current_timestamp()))
-    val staged = Staging.typed(raw)
-    val deduped = Staging.deduped(staged).cache()
-    val categoryDim = StarSchema.categoryDim(deduped)
-    val dims = SuperstoreDims(
-      date = StarSchema.dateDim(deduped),
-      shipMode = StarSchema.shipModeDim(deduped),
-      category = categoryDim,
-      subCategory = StarSchema.subCategoryDim(deduped, categoryDim),
-      geography = StarSchema.geographyDim(deduped),
-      customer = StarSchema.customerDim(deduped),
-      product = StarSchema.productDim(deduped))
-    val fact = StarSchema.salesFact(deduped, dims, runTs)
-    outputs(raw, staged, deduped, dims, fact, runTs)
+    fullLoad(raw, runTs)
   }
 
   /** Land the sales fact as a YEAR-partitioned `graft_cat` table with
@@ -209,6 +182,26 @@ object Pipeline {
     // to a fact that already carries load_ts (unionByName is strict)
     val incoming = StarSchema.salesFact(deduped, dims, runTs)
     val fact = StarSchema.appendFactIdempotent(priorFact, incoming)
+    outputs(raw, staged, deduped, dims, fact, runTs)
+  }
+
+  /** Day-1 build shared by [[run]] and [[runViaCatalog]]: staged ->
+    * deduped -> the seven dims -> fact -> marts, over any raw layer. */
+  private def fullLoad(raw: DataFrame, runTs: Option[String]): Outputs = {
+    val staged = Staging.typed(raw)
+    // dedup output feeds every downstream consumer: cache it (S5 — the
+    // reference materializes #temp tables for the same reason)
+    val deduped = Staging.deduped(staged).cache()
+    val categoryDim = StarSchema.categoryDim(deduped)
+    val dims = SuperstoreDims(
+      date = StarSchema.dateDim(deduped),
+      shipMode = StarSchema.shipModeDim(deduped),
+      category = categoryDim,
+      subCategory = StarSchema.subCategoryDim(deduped, categoryDim),
+      geography = StarSchema.geographyDim(deduped),
+      customer = StarSchema.customerDim(deduped),
+      product = StarSchema.productDim(deduped))
+    val fact = StarSchema.salesFact(deduped, dims, runTs)
     outputs(raw, staged, deduped, dims, fact, runTs)
   }
 

@@ -7,12 +7,11 @@ import graft.functions.Hashing
 import graft.operators.{DateSpine, Dims, Scd2, Windows}
 
 /** Star-schema builders: dims + fact (SURVEY §2.3-§2.5; SQLproject1.sql
-  * stages 7-11). Dims are tiny at reference cardinality and broadcast
-  * into the fact build — through [[Dims.broadcastIfSmall]], which probes
-  * the row count and withholds the hint above a cap, so a 100× SCD2
-  * customer dim degrades to the planner's sort-merge choice instead of
-  * OOMing the driver. The fact itself shuffles once on order_id for line
-  * numbering.
+  * stages 7-11). Dims are tiny at reference cardinality; the fact build
+  * joins them plainly and Spark picks the strategy from their size —
+  * broadcast under `spark.sql.autoBroadcastJoinThreshold` (statically, or
+  * at run time through AQE), sort-merge for a dim that outgrows it. The
+  * fact itself shuffles once on order_id for line numbering.
   */
 object StarSchema {
 
@@ -34,7 +33,7 @@ object StarSchema {
   def subCategoryDim(stg: DataFrame, catDim: DataFrame): DataFrame =
     stg.filter(col("category").isNotNull && col("sub_category").isNotNull)
       .select("category", "sub_category").distinct()
-      .join(Dims.broadcastIfSmall(catDim), "category")
+      .join(catDim, "category")
       .withColumn("sub_category_key",
         row_number().over(org.apache.spark.sql.expressions.Window
           .orderBy(col("category"), col("sub_category"))).cast("long"))
@@ -118,7 +117,7 @@ object StarSchema {
       .select("category", "sub_category").distinct()
       .join(existing.select("category", "sub_category"),
         Seq("category", "sub_category"), "left_anti")
-      .join(Dims.broadcastIfSmall(catDim.select("category", "category_key")), "category")
+      .join(catDim.select("category", "category_key"), "category")
     val maxKey = existing.agg(
       coalesce(max(col("sub_category_key")), lit(0L)).as("__mx"))
     val keyed = fresh
@@ -161,20 +160,20 @@ object StarSchema {
       .withColumn("__geo_hash", Hashing.hashKey(Seq(
         col("country"), col("state"), col("city"),
         Staging.normalizePostal(col("postal_code")), col("region"))))
-      .join(Dims.broadcastIfSmall(dims.geography.select(col("hash_key").as("__geo_hash"),
-        col("geography_key"))), Seq("__geo_hash"), "left")
+      .join(dims.geography.select(col("hash_key").as("__geo_hash"),
+        col("geography_key")), Seq("__geo_hash"), "left")
     val selected = geoKeyed
-      .join(Dims.broadcastIfSmall(dims.shipMode), Seq("ship_mode"), "left")
-      .join(Dims.broadcastIfSmall(dims.subCategory.select("sub_category", "category_key",
+      .join(dims.shipMode, Seq("ship_mode"), "left")
+      .join(dims.subCategory.select("sub_category", "category_key",
         "sub_category_key")
-        .withColumnRenamed("category_key", "__ck")), Seq("sub_category"), "left")
+        .withColumnRenamed("category_key", "__ck"), Seq("sub_category"), "left")
       // the filtered-unique invariant (UX_*_Current) makes the current slice
       // 1:1 on the natural key, so a plain inner-shaped left join replaces
       // the reference's CROSS APPLY TOP(1) (J3)
-      .join(Dims.broadcastIfSmall(dims.customer.filter(col("is_current"))
-        .select("customer_id", "customer_key")), Seq("customer_id"), "left")
-      .join(Dims.broadcastIfSmall(dims.product.filter(col("is_current"))
-        .select("product_id", "sub_category", "product_key")),
+      .join(dims.customer.filter(col("is_current"))
+        .select("customer_id", "customer_key"), Seq("customer_id"), "left")
+      .join(dims.product.filter(col("is_current"))
+        .select("product_id", "sub_category", "product_key"),
         Seq("product_id", "sub_category"), "left")
       .select(
         col("order_id"), col("order_line_no"),

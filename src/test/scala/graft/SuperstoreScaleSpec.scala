@@ -107,33 +107,28 @@ class SuperstoreScaleSpec extends SparkSpec {
     totalK shouldBe total1 * K
   }
 
-  test(s"guarded dim broadcasts at ${K}x: the hint forces the fast plan " +
-      "under the cap and is WITHHELD above it — identical mart totals") {
+  test(s"star joins at ${K}x: Spark's thresholds pick broadcast or " +
+      "sort-merge, mart totals identical") {
     assume(available)
     val total = outK.pivotByCategory.collect().find(_.isNullAt(0)).get
       .getAs[Long]("sum_quantity")
-    // auto-broadcast off isolates the HINT: with it, Spark's own size
-    // estimate would re-broadcast a 793-row dim and mask the guard
+    // default thresholds: every dim is under them, the fact stays
+    // broadcast (checkpointing the SAME Dataset finalizes its AQE plan)
+    val auto = Pipeline.run(spark, grown.toString)
+    auto.fact.localCheckpoint().count() shouldBe 9986L * K
+    (auto.fact.queryExecution.executedPlan.toString
+      should not).include("SortMergeJoin")
+    // both thresholds off — the posture of a dim too wide to broadcast:
+    // the planner falls back to sort-merge and nothing changes but the plan
     withSQLConf(
       "spark.sql.autoBroadcastJoinThreshold" -> "-1",
       "spark.sql.adaptive.autoBroadcastJoinThreshold" -> "-1") {
-      // default cap: every dim fits, the guarded hint keeps the star
-      // join broadcast even with the automatic thresholds disabled
-      val hinted = Pipeline.run(spark, grown.toString)
-      hinted.fact.count() shouldBe 9986L * K
-      (hinted.fact.queryExecution.executedPlan.toString
-        should not).include("SortMergeJoin")
-      // cap below customer (793) / product (1862): the hint is
-      // withheld, the planner falls back to sort-merge — the 100-TB
-      // wide-SCD2-dim posture — and nothing changes but the plan
-      withSQLConf(graft.operators.Dims.MaxBroadcastDimRowsKey -> "500") {
-        val guarded = Pipeline.run(spark, grown.toString)
-        guarded.fact.count() shouldBe 9986L * K
-        guarded.fact.queryExecution.executedPlan.toString should
-          include("SortMergeJoin")
-        guarded.pivotByCategory.collect().find(_.isNullAt(0)).get
-          .getAs[Long]("sum_quantity") shouldBe total
-      }
+      val sortMerge = Pipeline.run(spark, grown.toString)
+      sortMerge.fact.localCheckpoint().count() shouldBe 9986L * K
+      sortMerge.fact.queryExecution.executedPlan.toString should
+        include("SortMergeJoin")
+      sortMerge.pivotByCategory.collect().find(_.isNullAt(0)).get
+        .getAs[Long]("sum_quantity") shouldBe total
     }
   }
 
