@@ -24,7 +24,7 @@ import org.apache.spark.sql.types.{ByteType, DataType, IntegerType, LongType, Sh
   * label(label) is defined and monotonically smaller). Propagation alone
   * needs O(component diameter) rounds; each jump doubles effective reach,
   * so two jumps per round give ~4× reach growth — measured 10 rounds for
-  * a 300k-vertex chain vs ~18 with a single jump (DeepGraphProbe), and
+  * a 300k-vertex chain vs ~18 with a single jump (PLANS.md), and
   * per-round job overhead is exactly what dominates iterative Spark
   * loops. Only the round's FINAL frame is snapshotted (lineage stays
   * flat: `localCheckpoint` by default, reliable `checkpoint` when a
@@ -121,8 +121,8 @@ object Clusters {
     def prune(keep: DataFrame*): Unit = snaps.prune(keep: _*)
     // NOTE a pre-snapshot repartition(col("src")) does NOT save the
     // per-round edge exchange: localCheckpoint surfaces as a bare
-    // `Scan ExistingRDD` with unknown outputPartitioning (verified —
-    // graft.PartitionPreserveProbe), so every round re-exchanges edges
+    // `Scan ExistingRDD` with unknown outputPartitioning (measured, see
+    // PLANS.md), so every round re-exchanges edges
     // regardless. GraphX-style static edge partitioning would need the
     // loop lowered to RDDs with a partitioner; at the DataFrame tier the
     // honest lever is fewer rounds (the double jump below), not

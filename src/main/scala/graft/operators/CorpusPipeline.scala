@@ -50,8 +50,8 @@ object CorpusPipeline {
       // — the same degenerate-bucket guard as the LSH tier's
       // maxBandBucket, DEFAULT-ON: a near-dup clique that survives
       // exact dedup (boilerplate with per-mirror tweaks) otherwise
-      // detonates the candidate join quadratically (CorpusPipelineProbe
-      // measures the law). 0 = off for verification-scale exact passes.
+      // detonates the candidate join quadratically (PLANS.md
+      // records the growth law). 0 = off for verification-scale exact passes.
       nearDupMaxBucket: Int = 10000)
 
   /** `report` is LAZY: the per-stage counts (seven actions over the cached

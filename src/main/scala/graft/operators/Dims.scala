@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -9,14 +9,14 @@ import org.apache.spark.sql.functions._
   * Surrogate keys use strategy §7.4(a): `row_number()` over a deterministic
   * natural-key ordering — stable, dense, reproducible (the reference's
   * IDENTITY only guarantees key *semantics*, not values). The unpartitioned
-  * window funnels the dim through one task, which is correct for conformed
-  * dims (ship modes, categories, geographies — small by definition).
-  * [[buildDim]] and [[insertOnlyMerge]] are lazy (they run no Spark job),
-  * and joining a dim into a fact is a plain join — Spark's planner
-  * broadcasts it under `spark.sql.autoBroadcastJoinThreshold` and AQE
-  * converts the join at run time from observed sizes. A dim too large for
-  * one window task uses the explicit at-scale twins,
-  * [[buildDimDistributed]] and [[insertOnlyMergeDistributed]].
+  * window funnels the keys it numbers through one task, which is correct
+  * for conformed dims (ship modes, categories, geographies — small by
+  * definition) and for a day's new keys. Every merge — [[insertOnlyMerge]]
+  * and [[Scd2.mergeKeyed]] — assigns its fresh keys through one helper,
+  * [[withKeys]]. Everything here is lazy (no Spark job), and joining a dim
+  * into a fact is a plain join — Spark's planner broadcasts it under
+  * `spark.sql.autoBroadcastJoinThreshold` and AQE converts the join at run
+  * time from observed sizes.
   */
 object Dims {
 
@@ -27,73 +27,43 @@ object Dims {
   private def qcol(n: String) = col(s"`$n`")
 
   /** A1: distinct natural keys + dense deterministic surrogate key, numbered
-    * by one unpartitioned window (output-identical to
-    * [[buildDimDistributed]], DimsSpec). */
+    * by one unpartitioned window. */
   def buildDim(src: DataFrame, naturalKey: Seq[String], keyCol: String): DataFrame =
     src.select(naturalKey.map(qcol): _*).distinct().withColumn(keyCol,
       row_number().over(Window.orderBy(naturalKey.map(qcol): _*)).cast("long"))
 
-  /** Dense deterministic surrogate keys WITHOUT a single-task global
-    * window — the at-scale IDENTITY replacement for dims too large for
-    * [[buildDim]]. Range-partition the distinct natural keys, number rows
-    * within each partition, then add each partition's starting offset
-    * (computed from per-partition counts — one tiny driver-side action
-    * over numPartitions integers, never the data). Output is identical to
-    * [[buildDim]] on the same input; only the plan shape differs. */
-  def buildDimDistributed(src: DataFrame, naturalKey: Seq[String],
-                          keyCol: String, partitions: Int = 0): DataFrame = {
-    import org.apache.spark.sql.functions.spark_partition_id
-    val n = if (partitions > 0) partitions
-      else src.sparkSession.sparkContext.defaultParallelism
-    val keys = naturalKey.map(qcol)
-    val sorted = src.select(keys: _*).distinct()
-      .repartitionByRange(n, keys: _*)
-      .sortWithinPartitions(keys: _*)
-      .withColumn("__pid", spark_partition_id())
-    val localW = Window.partitionBy(col("__pid")).orderBy(keys: _*)
-    val numbered = sorted.withColumn("__rn", row_number().over(localW))
-      .localCheckpoint() // freeze partitioning: counts + keys must agree
-    val counts = numbered.groupBy("__pid").count()
-      .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
-    val offsets = (0 until n).scanLeft(0L) { (acc, p) =>
-      acc + counts.getOrElse(p, 0L)
-    }
-    val offsetCol = (0 until n).foldLeft(lit(0L)) { (acc, p) =>
-      when(col("__pid") === p, lit(offsets(p))).otherwise(acc)
-    }
-    numbered.withColumn(keyCol, (offsetCol + col("__rn")).cast("long"))
-      .drop("__pid", "__rn")
-  }
-
   /** J7: MERGE ... WHEN NOT MATCHED THEN INSERT (SQLproject1.sql:390-416) —
     * existing rows keep their surrogate keys; unseen natural keys are
-    * appended with keys offset past max(existing).
-    *
-    * Fresh keys are numbered with an unpartitioned window — one task over
-    * just the NEW keys, fine for conformed dims where a day's novelty is
-    * small. If a single batch can introduce a huge number of new keys, use
-    * [[insertOnlyMergeDistributed]] (same output, no global window). */
+    * appended with keys offset past max(existing) ([[withKeys]]). */
   def insertOnlyMerge(existing: DataFrame, incoming: DataFrame,
-                      naturalKey: Seq[String], keyCol: String): DataFrame = {
-    val fresh = freshKeys(existing, incoming, naturalKey)
-    val keyed = fresh
-      .withColumn("__rn",
-        row_number().over(Window.orderBy(naturalKey.map(qcol): _*)).cast("long"))
-    appendOffsetKeyed(existing, keyed, keyCol)
-  }
+                      naturalKey: Seq[String], keyCol: String): DataFrame =
+    existing.unionByName(
+      withKeys(existing, freshKeys(existing, incoming, naturalKey),
+          naturalKey.map(qcol), keyCol)
+        .select(existing.columns.toIndexedSeq.map(qcol): _*))
 
-  /** [[insertOnlyMerge]] with fresh-key numbering done by the
-    * [[buildDimDistributed]] machinery instead of an unpartitioned window —
-    * identical output, but new-key assignment scales past one task. */
-  def insertOnlyMergeDistributed(existing: DataFrame, incoming: DataFrame,
-                                 naturalKey: Seq[String], keyCol: String,
-                                 partitions: Int = 0): DataFrame = {
-    val fresh = freshKeys(existing, incoming, naturalKey)
-    // NOT "__rn": buildDimDistributed uses that name internally and would
-    // drop the output key with its own scratch column
-    val keyed = buildDimDistributed(fresh, naturalKey, "__fresh_rn", partitions)
-      .withColumnRenamed("__fresh_rn", "__rn")
-    appendOffsetKeyed(existing, keyed, keyCol)
+  /** Fresh surrogate keys, the one place a merge numbers new dim rows:
+    * max(existing `keyCol`) + the row's dense `row_number` in `order`.
+    *
+    * If `rows` carries `keyCol`, only its NULL-keyed rows are numbered and
+    * every other row keeps its key. Carried keys are unique, so windowing
+    * by the key gives each carried row a partition of its own and leaves
+    * the NULL-keyed rows as the one partition the numbering runs over —
+    * one task over a day's novelty, however large the carried rows. */
+  private[operators] def withKeys(existing: DataFrame, rows: DataFrame,
+                                  order: Seq[Column], keyCol: String): DataFrame = {
+    val maxKey = existing.agg(coalesce(max(qcol(keyCol)), lit(0L)).as("__mx"))
+    val fresh = (col("__mx") + col("__rn")).cast("long")
+    val (byKey, key) =
+      if (rows.columns.contains(keyCol))
+        (Seq(qcol(keyCol)), when(qcol(keyCol).isNull, fresh).otherwise(qcol(keyCol)))
+      else (Nil, fresh)
+    rows
+      .withColumn("__rn",
+        row_number().over(Window.partitionBy(byKey: _*).orderBy(order: _*)).cast("long"))
+      .crossJoin(broadcast(maxKey))
+      .withColumn(keyCol, key)
+      .drop("__rn", "__mx")
   }
 
   /** Incoming natural keys not yet in the dim, under NULL-SAFE key
@@ -109,16 +79,5 @@ object Dims {
     val cond = naturalKey.map(k => col(s"inc.`$k`") <=> col(s"ex.`$k`"))
       .reduce(_ && _)
     inc.join(ex, cond, "left_anti")
-  }
-
-  /** Shift dense 1..n `__rn` keys past max(existing key) and append. */
-  private def appendOffsetKeyed(existing: DataFrame, keyed: DataFrame,
-                                keyCol: String): DataFrame = {
-    val maxKey = existing.agg(coalesce(max(qcol(keyCol)), lit(0L)).as("__mx"))
-    val shifted = keyed
-      .crossJoin(broadcast(maxKey))
-      .withColumn(keyCol, (col("__mx") + col("__rn")).cast("long"))
-      .drop("__rn", "__mx")
-    existing.unionByName(shifted.select(existing.columns.toIndexedSeq.map(qcol): _*))
   }
 }

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.functions.Hashing
@@ -22,11 +22,14 @@ import graft.functions.Hashing
   * reproduced; we detect change purely by hash-diff, so a same-day re-run
   * with an unchanged snapshot is a no-op.
   *
-  * Scale: the classifier is two hash-partitioned joins on the natural key
-  * (semi for changed, anti for brand-new) over the *current* slice only;
-  * history rows pass through untouched. Caller should `localCheckpoint()`
-  * the input dim before overwriting the table it came from
-  * (read-then-overwrite hazard, SURVEY §7.5.1).
+  * Scale: like the reference's one MERGE per dim, the classifier is ONE
+  * full outer join of the *current* slice and the hashed snapshot on the
+  * natural key, and each joined row is classified once (kept, closed plus
+  * new version, brand-new); history rows pass through untouched. The key
+  * equality is NULL-safe (`<=>`): a natural key with a NULL part still
+  * matches its current row instead of re-entering as brand-new. Caller
+  * should `localCheckpoint()` the input dim before overwriting the table
+  * it came from (read-then-overwrite hazard, SURVEY §7.5.1).
   */
 object Scd2 {
 
@@ -46,33 +49,9 @@ object Scd2 {
   /** Merge a new snapshot into an existing SCD2 dim. */
   def merge(dim: DataFrame, snapshot: DataFrame, naturalKey: Seq[String],
             tracked: Seq[String], runDate: String): DataFrame = {
-    val snap = withHashDiff(snapshot, tracked)
-    val current = dim.filter(col("is_current"))
-    val history = dim.filter(!col("is_current"))
-
-    val changedKeys = current
-      .select(naturalKey.map(col) :+ col("hash_diff").as("__cur_hd"): _*)
-      .join(snap.select(naturalKey.map(col) :+ col("hash_diff").as("__snap_hd"): _*),
-            naturalKey)
-      .filter(col("__cur_hd") =!= col("__snap_hd"))
-      .select(naturalKey.map(col): _*)
-
-    val kept = current.join(changedKeys, naturalKey, "left_anti")
-    val closed = current.join(changedKeys, naturalKey, "left_semi")
-      .withColumn("effective_to", to_date(lit(runDate)))
-      .withColumn("is_current", lit(false))
-    val newVersions = snap.join(changedKeys, naturalKey, "left_semi")
-      .withColumn("effective_from", to_date(lit(runDate)))
-      .withColumn("effective_to", to_date(lit(OpenEnd)))
-      .withColumn("is_current", lit(true))
-    val brandNew = snap.join(current, naturalKey, "left_anti")
-      .withColumn("effective_from", to_date(lit(OpenStart)))
-      .withColumn("effective_to", to_date(lit(OpenEnd)))
-      .withColumn("is_current", lit(true))
-
-    Seq(history, kept, closed, newVersions, brandNew)
-      .map(_.select(kept.columns.toIndexedSeq.map(col): _*))
-      .reduce(_ unionByName _)
+    val (history, versions) = classify(dim, snapshot, naturalKey, tracked,
+      runDate, keyCol = None)
+    history.unionByName(versions)
   }
 
   /** [[merge]] for a dim that carries a surrogate key column: surviving
@@ -82,39 +61,59 @@ object Scd2 {
     * new current version, brand-new keys) get fresh keys offset past
     * max(existing).
     *
-    * A version row is identified by (naturalKey, effective_from,
-    * hash_diff): effective_from alone is NOT unique when a key changes
-    * twice under one runDate (the second merge closes a version that
-    * opened at runDate and opens another at runDate), but those two
-    * versions necessarily carry different hash_diffs — change detection IS
-    * hash inequality. The one identity this cannot distinguish is a value
-    * flipping A→B→A in THREE same-day merges (the third A-version repeats
-    * the first's hash at the same start date); same-day re-merges are
-    * already outside the reference's own semantics (it keys change
-    * detection on EffectiveTo = today), so that corner is documented, not
-    * handled. Fresh-key numbering windows over only the new rows — one
-    * task over a day's novelty, same posture as
-    * [[graft.operators.Dims.insertOnlyMerge]]. */
+    * An unchanged or closed row is the current row itself, so its key
+    * rides through the classifier join. Fresh keys come from
+    * [[Dims.withKeys]], numbered in (naturalKey, effective_from, hash_diff)
+    * order. */
   def mergeKeyed(dim: DataFrame, snapshot: DataFrame, naturalKey: Seq[String],
                  tracked: Seq[String], runDate: String,
                  keyCol: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val merged = merge(dim.drop(keyCol), snapshot, naturalKey, tracked, runDate)
-    val versionId = naturalKey :+ "effective_from" :+ "hash_diff"
-    val keyMap = dim.select(versionId.map(col) :+ col(keyCol): _*)
-    val joined = merged.join(keyMap, versionId, "left")
-    val kept = joined.filter(col(keyCol).isNotNull)
-    val maxKey = dim.agg(coalesce(max(col(keyCol)), lit(0L)).as("__mx"))
-    val fresh = joined.filter(col(keyCol).isNull).drop(keyCol)
-      .withColumn("__rn",
-        row_number().over(Window.orderBy(versionId.map(col): _*)).cast("long"))
-      .crossJoin(broadcast(maxKey))
-      .withColumn(keyCol, (col("__mx") + col("__rn")).cast("long"))
-      .drop("__rn", "__mx")
-    // emit the input dim's column ORDER: a MERGE updates a table in place
-    // and never reorders its schema (and positional ops like except/union
-    // on prior-vs-merged would silently misalign otherwise)
-    val cols = dim.columns.toIndexedSeq.map(col)
-    kept.select(cols: _*).unionByName(fresh.select(cols: _*))
+    val (history, versions) = classify(dim, snapshot, naturalKey, tracked,
+      runDate, Some(keyCol))
+    val order = (naturalKey :+ "effective_from" :+ "hash_diff").map(col)
+    history.unionByName(Dims.withKeys(dim, versions, order, keyCol))
+  }
+
+  /** The dim's history rows, and the version rows that one full outer join
+    * of its current slice with the hashed snapshot yields. A joined row
+    * emits its current side (kept, or closed when the hashes differ) and
+    * its snapshot side (a new version when the hashes differ, brand-new
+    * when there is no current row); `keep` drops the sides that emit
+    * nothing. Both carry the dim's columns in the dim's order — a MERGE
+    * never reorders its table's schema — and `keyCol`, if given, is NULL
+    * on the snapshot side. */
+  private def classify(dim: DataFrame, snapshot: DataFrame,
+                       naturalKey: Seq[String], tracked: Seq[String],
+                       runDate: String,
+                       keyCol: Option[String]): (DataFrame, DataFrame) = {
+    def c(n: String) = col(s"__c.`$n`")
+    def s(n: String) = col(s"__s.`$n`")
+    val joined = dim.filter(col("is_current")).as("__c").join(
+      withHashDiff(snapshot, tracked).as("__s"),
+      naturalKey.map(k => c(k) <=> s(k)).reduce(_ && _), "full_outer")
+
+    val hasCurrent = c("is_current").isNotNull
+    val hasSnapshot = s("hash_diff").isNotNull
+    val changed = hasCurrent && hasSnapshot && !(c("hash_diff") <=> s("hash_diff"))
+    def side(keep: Column, value: String => Column): Column =
+      struct(dim.columns.map(n => value(n).as(n)) :+ keep.as("__keep"): _*)
+    val currentSide = side(hasCurrent, {
+      case "effective_to" => when(changed, to_date(lit(runDate)))
+        .otherwise(c("effective_to"))
+      case "is_current" => !changed
+      case n => c(n)
+    })
+    val snapshotSide = side(hasSnapshot && (changed || !hasCurrent), {
+      case "effective_from" => when(hasCurrent, to_date(lit(runDate)))
+        .otherwise(to_date(lit(OpenStart)))
+      case "effective_to" => to_date(lit(OpenEnd))
+      case "is_current" => lit(true)
+      case n if keyCol.contains(n) => lit(null).cast(dim.schema(n).dataType)
+      case n => s(n)
+    })
+
+    val versions = joined.select(inline(array(currentSide, snapshotSide)))
+      .filter(col("__keep")).drop("__keep")
+    (dim.filter(!col("is_current")), versions)
   }
 }

@@ -982,7 +982,7 @@ private[sources] class QuirkCsvScan(fullSchema: StructType,
       // per-row objects (see QuirkCsvColumnarReader). STAYS opt-in by
       // measurement: on a 876 MB / 4M-row / 21-col fixture with a
       // non-pushable all-column consumer, row 4.94 s vs columnar 4.97 s
-      // (ColumnarProbe, AQE-stage-reuse corrected) — the latin-1 field
+      // (PLANS.md, AQE-stage-reuse corrected) — the latin-1 field
       // PARSE dominates and the batch handoff it replaces is noise, so
       // flipping the default would buy nothing until the parse itself
       // vectorizes

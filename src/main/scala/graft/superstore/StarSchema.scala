@@ -11,7 +11,10 @@ import graft.operators.{DateSpine, Dims, Scd2, Windows}
   * joins them plainly and Spark picks the strategy from their size —
   * broadcast under `spark.sql.autoBroadcastJoinThreshold` (statically, or
   * at run time through AQE), sort-merge for a dim that outgrows it. The
-  * fact itself shuffles once on order_id for line numbering.
+  * fact itself shuffles once on order_id for line numbering. Day-2 dim
+  * merges never number keys themselves: the insert-only ones are
+  * [[Dims.insertOnlyMerge]], the SCD2 ones [[Scd2.mergeKeyed]], and both
+  * take their fresh keys from the one offset numbering in [[Dims]].
   */
 object StarSchema {
 
@@ -30,13 +33,20 @@ object StarSchema {
     Dims.buildDim(stg.filter(col("category").isNotNull), Seq("category"),
       "category_key")
 
+  /** dim.SubCategory: (category, sub_category) pairs keyed like every other
+    * conformed dim, with `category_key` attached from the category dim. */
   def subCategoryDim(stg: DataFrame, catDim: DataFrame): DataFrame =
+    withCategoryKey(Dims.buildDim(subCategories(stg), SubCategoryKey,
+      "sub_category_key"), catDim,
+      Seq("category", "sub_category", "category_key", "sub_category_key"))
+
+  private val SubCategoryKey = Seq("category", "sub_category")
+  private def subCategories(stg: DataFrame): DataFrame =
     stg.filter(col("category").isNotNull && col("sub_category").isNotNull)
-      .select("category", "sub_category").distinct()
-      .join(catDim, "category")
-      .withColumn("sub_category_key",
-        row_number().over(org.apache.spark.sql.expressions.Window
-          .orderBy(col("category"), col("sub_category"))).cast("long"))
+  private def withCategoryKey(subCats: DataFrame, catDim: DataFrame,
+                              order: Seq[String]): DataFrame =
+    subCats.join(catDim.select("category", "category_key"), "category")
+      .select(order.map(col): _*)
 
   /** dim.Geography with normalized postal codes and a persisted MD5 hash
     * key (P7/X3/J2; SQLproject1.sql:314-447). */
@@ -107,32 +117,19 @@ object StarSchema {
         col("region"))))
   }
 
-  /** Insert-only sub-category merge: new (category, sub_category) pairs
-    * pick up their category_key from the (already-merged) category dim and
-    * append past max(sub_category_key). */
+  /** Insert-only sub-category merge ([[Dims.insertOnlyMerge]] over
+    * (category, sub_category)): existing pairs keep their keys, new pairs
+    * append past max(sub_category_key), and every pair takes its
+    * `category_key` from the (already-merged) category dim. */
   def subCategoryDimMerge(existing: DataFrame, stg: DataFrame,
-                          catDim: DataFrame): DataFrame = {
-    val fresh = stg
-      .filter(col("category").isNotNull && col("sub_category").isNotNull)
-      .select("category", "sub_category").distinct()
-      .join(existing.select("category", "sub_category"),
-        Seq("category", "sub_category"), "left_anti")
-      .join(catDim.select("category", "category_key"), "category")
-    val maxKey = existing.agg(
-      coalesce(max(col("sub_category_key")), lit(0L)).as("__mx"))
-    val keyed = fresh
-      .withColumn("__rn", row_number().over(
-        org.apache.spark.sql.expressions.Window
-          .orderBy(col("category"), col("sub_category"))).cast("long"))
-      .crossJoin(broadcast(maxKey))
-      .withColumn("sub_category_key", (col("__mx") + col("__rn")).cast("long"))
-      .drop("__rn", "__mx")
-    existing.unionByName(
-      keyed.select(existing.columns.toIndexedSeq.map(col): _*))
-  }
+                          catDim: DataFrame): DataFrame =
+    withCategoryKey(Dims.insertOnlyMerge(existing.drop("category_key"),
+      subCategories(stg), SubCategoryKey, "sub_category_key"), catDim,
+      existing.columns.toIndexedSeq)
 
-  /** SCD2 day-2 merges (J8): surviving version rows keep their surrogate
-    * keys, new versions get keys past max — [[graft.operators.Scd2.mergeKeyed]]. */
+  /** SCD2 day-2 merges (J8), one classifier join each: surviving version
+    * rows keep their surrogate keys, new versions get keys past max —
+    * [[graft.operators.Scd2.mergeKeyed]]. */
   def customerDimMerge(existing: DataFrame, stg: DataFrame,
                        runDate: String): DataFrame =
     Scd2.mergeKeyed(existing, customerSnapshot(stg), Seq("customer_id"),

@@ -22,43 +22,6 @@ class DimsSpec extends SparkSpec {
       Seq(("a", 1L), ("b", 2L), ("c", 3L), ("d", 4L))
   }
 
-  test("buildDimDistributed: identical keys to buildDim, no global window") {
-    val src = Tables.customer(spark, "/root/testdata/sf0.001")
-      .select($"c_name".as("nk"))
-    val global = Dims.buildDim(src, Seq("nk"), "k")
-    val dist = Dims.buildDimDistributed(src, Seq("nk"), "k", partitions = 4)
-    dist.count() shouldBe global.count()
-    global.except(dist).count() shouldBe 0
-    dist.except(global).count() shouldBe 0
-    // keys are dense 1..n
-    dist.agg(min($"k"), max($"k")).as[(Long, Long)].head() shouldBe
-      ((1L, global.count()))
-    // and the plan has no empty-partitionBy window
-    val plan = Dims.buildDimDistributed(src, Seq("nk"), "k", partitions = 4)
-      .queryExecution.executedPlan.toString
-    plan should not include "windowspecdefinition(nk"
-  }
-
-  test("insertOnlyMergeDistributed == insertOnlyMerge, no global window") {
-    val all = Tables.customer(spark, "/root/testdata/sf0.001")
-      .select($"c_name".as("nk"))
-    // deterministic "prior" slice (limit() could pick different rows per
-    // evaluation of the lazy plans below); localCheckpoint freezes the
-    // buildDim window OUT of the merged plan so the no-window assertion
-    // below covers only the merge machinery
-    val existing = Dims.buildDim(all.filter($"nk" < "Customer#000000800"),
-      Seq("nk"), "k").localCheckpoint()
-    val windowed = Dims.insertOnlyMerge(existing, all, Seq("nk"), "k")
-    val dist = Dims.insertOnlyMergeDistributed(existing, all, Seq("nk"), "k",
-      partitions = 4)
-    dist.count() shouldBe windowed.count()
-    windowed.except(dist).count() shouldBe 0
-    dist.except(windowed).count() shouldBe 0
-    val plan = Dims.insertOnlyMergeDistributed(existing, all, Seq("nk"), "k",
-      partitions = 4).queryExecution.executedPlan.toString
-    plan should not include "windowspecdefinition(nk"
-  }
-
   test("insertOnlyMerge is idempotent when nothing is new") {
     val existing = Dims.buildDim(Seq("a", "b").toDF("nk"), Seq("nk"), "k")
     val merged = Dims.insertOnlyMerge(existing, Seq("a", "b").toDF("nk"),
@@ -78,10 +41,6 @@ class DimsSpec extends SparkSpec {
       Seq("city", "postal"), "k")
     run2.count() shouldBe 2
     run2.except(existing).count() shouldBe 0
-    val run2d = Dims.insertOnlyMergeDistributed(existing, incoming,
-      Seq("city", "postal"), "k", partitions = 2)
-    run2d.count() shouldBe 2
-    run2d.except(existing).count() shouldBe 0
   }
 
   test("dotted natural-key column names work end-to-end (quoted, not " +
@@ -98,8 +57,5 @@ class DimsSpec extends SparkSpec {
       Seq("addr.city", "geo.postal"), "k")
     run2.count() shouldBe 3
     run2.except(existing).count() shouldBe 1 // only z is new
-    val run2d = Dims.insertOnlyMergeDistributed(existing, withNew,
-      Seq("addr.city", "geo.postal"), "k", partitions = 2)
-    run2d.select("k").except(run2.select("k")).count() shouldBe 0
   }
 }

@@ -1,6 +1,8 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.plans.FullOuter
+import org.apache.spark.sql.catalyst.plans.logical.{Filter, Join, LogicalPlan, Range}
 import org.apache.spark.sql.functions._
 
 import graft.operators.Scd2
@@ -133,5 +135,33 @@ class Scd2Spec extends SparkSpec {
     dim1.count() shouldBe 2
     dim1.except(dim0.select(dim1.columns.toIndexedSeq.map(col): _*))
       .count() shouldBe 0
+  }
+
+  test("mergeKeyed plans ONE classifier join, current slice x snapshot, " +
+    "besides the one-row max-key cross join") {
+    // range-derived inputs, so the optimizer cannot fold the current-slice
+    // filter into a local relation; the two ranges tell the sides apart
+    val dim = spark.range(0, 4).select($"id".cast("int").as("key"),
+        lit("a").as("name"), lit("X").as("segment"))
+      .transform(Scd2.initialLoad(_, tracked))
+      .withColumn("is_current", $"key" =!= 1)
+      .withColumn("sk", $"key".cast("long"))
+    val snapshot = spark.range(2, 7).select($"id".cast("int").as("key"),
+      lit("a").as("name"), lit("Y").as("segment"))
+    val plan = Scd2.mergeKeyed(dim, snapshot, Seq("key"), tracked,
+      "2024-06-01", "sk").queryExecution.optimizedPlan
+
+    val (maxKey, classifier) = plan.collect { case j: Join => j }
+      .partition(j => j.right.maxRows.contains(1L))
+    maxKey should have size 1
+    classifier should have size 1
+    val join = classifier.head
+    join.joinType shouldBe FullOuter
+    def range(p: LogicalPlan) = p.collectLeaves().collect {
+      case r: Range => (r.start, r.end)
+    }
+    range(join.left) shouldBe Seq((0L, 4L))
+    join.left.exists(_.isInstanceOf[Filter]) shouldBe true // current slice
+    range(join.right) shouldBe Seq((2L, 7L))
   }
 }

@@ -68,6 +68,15 @@ class SuperstoreFixtureSpec extends SparkSpec {
         .map(_.toSeq.map(String.valueOf).mkString("\u001f")).toSeq.sorted)
     }
 
+  /** One MD5 per table over its [[contents]]: schema DDL, then the sorted
+    * rows, newline-separated. `golden.json` pins these for both days. */
+  private def digests(day: String, o: Outputs): Seq[(String, String)] =
+    contents(o).map { case (name, ddl, rows) =>
+      val md5 = java.security.MessageDigest.getInstance("MD5")
+        .digest((ddl +: rows).mkString("\n").getBytes("UTF-8"))
+      s"$day/$name" -> md5.map(b => f"$b%02x").mkString
+    }
+
   /** Join operators of the fact's FINAL plan: AQE's plan string also
     * prints the initial plan, so walk the executed tree (query stages
     * included) instead. Read after [[contents]] has run the fact. */
@@ -126,7 +135,8 @@ class SuperstoreFixtureSpec extends SparkSpec {
   }
 
   test("day-1 and day-2 outputs match the generator's ground truth") {
-    val truth = new ObjectMapper().readTree(new File(resource("truth.json")))
+    val mapper = new ObjectMapper()
+    val truth = mapper.readTree(new File(resource("truth.json")))
     def want(path: String): Long = truth.at(path).asLong
     val (d1, d2) = twoDays()
     d1.raw.count() shouldBe want("/day1/lines")
@@ -152,5 +162,13 @@ class SuperstoreFixtureSpec extends SparkSpec {
         col("product_key").isNull || col("geography_key").isNull ||
         col("sub_category_key").isNull).count() shouldBe 0
     }
+    // byte identity: every table's schema and rows, against the digests
+    // recorded from a known-good build (TESTDATA.md, "golden.json"); a
+    // failure lists each drifted table with the digest this build made
+    val golden = mapper.readTree(new File(resource("golden.json")))
+    val actual = digests("day1", d1) ++ digests("day2", d2)
+    golden.size shouldBe actual.size
+    actual.filter { case (table, md5) => golden.path(table).asText != md5 } shouldBe
+      empty
   }
 }
