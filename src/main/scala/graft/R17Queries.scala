@@ -116,7 +116,7 @@ object R17Queries {
       // must touch nothing — not even a version bump
       val root = s.conf.get("spark.sql.catalog.graft_r17.root")
       val fs = new org.apache.hadoop.fs.Path(root)
-        .getFileSystem(new org.apache.hadoop.conf.Configuration())
+        .getFileSystem(graft.sources.hadoopConf)
       def versions = (
         graft.sources.QuirkCsvVersions.currentVersion(fs,
           new org.apache.hadoop.fs.Path(s"$root/q365/ann_centroids")),

@@ -5,7 +5,6 @@ import java.util
 import scala.collection.mutable.ArrayBuffer
 import scala.jdk.CollectionConverters._
 
-import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, SupportsWrite, Table, TableCapability, TableProvider}
@@ -93,8 +92,9 @@ class QuirkCsvDataSource extends TableProvider with DataSourceRegister {
 
   override def inferSchema(options: CaseInsensitiveStringMap): StructType = {
     // a missing/empty location infers an empty schema instead of failing:
-    // the write path (DataFrameWriter.save to a fresh directory) infers
-    // before LogicalWriteInfo supplies the query schema
+    // a streaming write to a fresh directory infers before LogicalWriteInfo
+    // supplies the query schema. A READ of a missing location fails in
+    // QuirkCsvTable.schema, which only the read side consults.
     val files = QuirkCsv.listFiles(options)
     if (files.isEmpty) return new StructType()
     // catalog tables carry a seed header file that IS the table schema —
@@ -158,7 +158,20 @@ private[sources] class QuirkCsvTable(tableSchema: StructType,
   override def name(): String =
     s"graftcsv(${options.getOrDefault("path", "?")})"
 
-  override def schema(): StructType = tableSchema
+  /** Fails with Spark's `PATH_NOT_FOUND`, naming the path, when the schema
+    * was inferred from a missing location: a read builds its relation from
+    * this schema, so a misspelt path fails at `load` instead of as an
+    * unresolved column later. A write to a fresh directory never asks (a
+    * batch write passes the query's schema, a streaming sink plans from
+    * `LogicalWriteInfo`), so it still creates the directory. */
+  override def schema(): StructType = {
+    if (tableSchema.isEmpty && options.containsKey("path") &&
+        !tableRoot.getFileSystem(hadoopConf).exists(tableRoot))
+      throw new org.apache.spark.sql.AnalysisException(
+        errorClass = "PATH_NOT_FOUND",
+        messageParameters = Map("path" -> tableRoot.toString))
+    tableSchema
+  }
 
   /** `_file` metadata column (`SELECT _file, * FROM t`): the data file a
     * row was read from — per-row provenance for free (the reader knows
@@ -236,7 +249,7 @@ private[sources] class QuirkCsvTable(tableSchema: StructType,
       s"graftcsv metadata DELETE handles partition-column predicates " +
         s"only, got [${filters.mkString(", ")}]")
     val cols = partitionCols
-    val fs = tableRoot.getFileSystem(new Configuration())
+    val fs = tableRoot.getFileSystem(hadoopConf)
     if (!fs.exists(tableRoot)) return
     // predicates may hit ANY subset of the levels (a partial spec like
     // `batch = 'b'` on a (band_bucket, batch) layout matches every
@@ -270,7 +283,7 @@ private[sources] class QuirkCsvTable(tableSchema: StructType,
     * seed and partitioning marker (the empty table stays readable and
     * writable). */
   override def truncateTable(): Boolean = {
-    val fs = tableRoot.getFileSystem(new Configuration())
+    val fs = tableRoot.getFileSystem(hadoopConf)
     if (!fs.exists(tableRoot)) return true
     val versioned = QuirkCsvVersions.isVersioned(fs, tableRoot)
     partitionCols.headOption match {
@@ -359,7 +372,7 @@ private[sources] class QuirkCsvTable(tableSchema: StructType,
         "directory is always <tableRoot>/<col>=<value>; external " +
         "LOCATIONs are unsupported")
     val dir = partDir(ident)
-    val fs = dir.getFileSystem(new Configuration())
+    val fs = dir.getFileSystem(hadoopConf)
     if (fs.exists(dir))
       throw new org.apache.spark.sql.catalyst.analysis
         .PartitionsAlreadyExistException(name(), ident, partitionSchema())
@@ -368,7 +381,7 @@ private[sources] class QuirkCsvTable(tableSchema: StructType,
 
   override def dropPartition(ident: InternalRow): Boolean = {
     val dir = partDir(ident)
-    val fs = dir.getFileSystem(new Configuration())
+    val fs = dir.getFileSystem(hadoopConf)
     if (!fs.exists(dir)) return false
     if (QuirkCsvVersions.isVersioned(fs, tableRoot)) {
       QuirkCsvVersions.commit(fs, tableRoot, "dropPartition", Nil, Nil,
@@ -379,7 +392,7 @@ private[sources] class QuirkCsvTable(tableSchema: StructType,
 
   override def partitionExists(ident: InternalRow): Boolean = {
     val dir = partDir(ident)
-    dir.getFileSystem(new Configuration()).exists(dir)
+    dir.getFileSystem(hadoopConf).exists(dir)
   }
 
   override def replacePartitionMetadata(
@@ -397,7 +410,7 @@ private[sources] class QuirkCsvTable(tableSchema: StructType,
     require(names.forall(n => cols.exists(_.equalsIgnoreCase(n))),
       s"unknown partition column(s) ${names.mkString(", ")} — the " +
         s"partitioning is (${cols.mkString(", ")})")
-    val fs = tableRoot.getFileSystem(new Configuration())
+    val fs = tableRoot.getFileSystem(hadoopConf)
     if (!fs.exists(tableRoot)) return Array.empty
     val wanted: Seq[(Int, UTF8String)] = names.toIndexedSeq.zipWithIndex
       .map { case (n, i) =>
@@ -1290,7 +1303,7 @@ private[sources] class QuirkCsvReader(part: QuirkCsvPartition,
 
   private val in = {
     val path = new Path(part.path)
-    val fs = path.getFileSystem(new Configuration())
+    val fs = path.getFileSystem(hadoopConf)
     fs.open(path)
   }
   // Hadoop's split-start contract: seek to start-1 and discard one line.
@@ -1948,7 +1961,7 @@ private[sources] class QuirkCsvMicroBatchStream(
   restoreManifest()
 
   private def manifestFs: FileSystem =
-    manifestDir.getFileSystem(new Configuration())
+    manifestDir.getFileSystem(hadoopConf)
 
   /** Rebuild `seen` from the manifest segments, oldest first. Entries
     * whose file is gone stay as PLACEHOLDERS — their positions must keep
@@ -2236,7 +2249,7 @@ private[sources] class QuirkCsvWriteBuilder(path: String,
       // files beside the schema seed, where the scan's stray-file guard
       // then rejects the whole table — catch it at the write instead
       val p = new Path(path, QuirkCsv.PartitioningFile)
-      require(!p.getFileSystem(new Configuration()).exists(p),
+      require(!p.getFileSystem(hadoopConf).exists(p),
         s"$path is a PARTITIONED graftcsv table — write it through its " +
           "catalog (the partitionCol option routes rows into value " +
           "directories); a flat write would strand data files at the root")
@@ -2408,7 +2421,7 @@ private[sources] class QuirkCsvWrite(path: String, columns: Array[String],
     // the flag ships to the tasks
     val root = new Path(path)
     val preserve = QuirkCsvVersions.isVersioned(
-      root.getFileSystem(new Configuration()), root)
+      root.getFileSystem(hadoopConf), root)
     if (partitionCols.nonEmpty)
       new QuirkCsvPartitionedStreamingWriterFactory(path, columns, header,
         queryId, partitionCols.toArray,
@@ -2450,12 +2463,12 @@ private[sources] class QuirkCsvWrite(path: String, columns: Array[String],
     // OF. Unversioned (raw-path) directories dispose physically, exactly
     // as before.
     val root = new Path(path)
-    val rootFs = root.getFileSystem(new Configuration())
+    val rootFs = root.getFileSystem(hadoopConf)
     val versioned = QuirkCsvVersions.isVersioned(rootFs, root)
     val retired = ArrayBuffer.empty[Path]
     val dispose: Path => Unit =
       if (versioned) (p => retired += p)
-      else (p => p.getFileSystem(new Configuration()).delete(p, false))
+      else (p => p.getFileSystem(hadoopConf).delete(p, false))
     if (partitionCols.isEmpty) {
         val commits = messages.collect { case c: QuirkCsvCommit => c }
         if (truncateFirst) {
@@ -2532,7 +2545,7 @@ private[sources] class QuirkCsvWrite(path: String, columns: Array[String],
         .map(t => t -> new Path(cm.file).getName)
     }.groupBy(_._1).map { case (t, ns) => t -> ns.map(_._2).toSet }
     val root = new Path(path)
-    val fs = root.getFileSystem(new Configuration())
+    val fs = root.getFileSystem(hadoopConf)
     val targetValues: Set[Seq[String]] = mode match {
       case QuirkCsvWriteMode.DynamicPartitions => writtenByValue.keySet
       case QuirkCsvWriteMode.OverwriteWhere(filters) =>
@@ -2619,12 +2632,12 @@ private[sources] class QuirkCsvWrite(path: String, columns: Array[String],
     // keeps history closed. The current-version probe lists only the
     // tiny log dir — O(epochs) names, no data I/O.
     val root = new Path(path)
-    val rootFs = root.getFileSystem(new Configuration())
+    val rootFs = root.getFileSystem(hadoopConf)
     val versioned = QuirkCsvVersions.isVersioned(rootFs, root)
     val phantoms = ArrayBuffer.empty[Path]
     val dispose: Path => Unit =
       if (versioned) (p => phantoms += p)
-      else (p => p.getFileSystem(new Configuration()).delete(p, false))
+      else (p => p.getFileSystem(hadoopConf).delete(p, false))
     val commits = allCommits(messages)
     if (partitionCols.isEmpty) {
         if (doSweep) {
@@ -2682,7 +2695,7 @@ private[sources] class QuirkCsvWrite(path: String, columns: Array[String],
     * every partitioned value directory. */
   private def mergeZoneMapAt(dir: Path, commits: Seq[QuirkCsvCommit],
                              dropPrior: Boolean): Unit = {
-    val fs = dir.getFileSystem(new Configuration())
+    val fs = dir.getFileSystem(hadoopConf)
     val written = commits.map(c => new Path(c.file).getName).toSet
     val prior =
       if (dropPrior) Map.empty[String, QuirkCsvZoneEntry]
@@ -2711,7 +2724,7 @@ private[sources] class QuirkCsvWrite(path: String, columns: Array[String],
   private def deleteFiles(messages: Array[WriterCommitMessage]): Unit = {
     def del(c: QuirkCsvCommit): Unit = {
       val p = new Path(c.file)
-      val fs = p.getFileSystem(new Configuration())
+      val fs = p.getFileSystem(hadoopConf)
       fs.delete(p, false)
     }
     messages.foreach {
@@ -2783,7 +2796,7 @@ private[sources] class QuirkCsvRenamingWriter(tmp: String, dest: String,
   override def commit(): WriterCommitMessage = {
     val m = super.commit().asInstanceOf[QuirkCsvCommit]
     val destPath = new Path(dest)
-    val fs = destPath.getFileSystem(new Configuration())
+    val fs = destPath.getFileSystem(hadoopConf)
     var aside: String = null
     if (preserveReplaced) {
       val asidePath = new Path(destPath.getParent,
@@ -2965,7 +2978,7 @@ private[sources] class QuirkCsvPartitionedWriter(
     open.getOrElseUpdate(values, {
       val dir = QuirkCsv.partitionDirPath(new Path(basePath),
         partitionCols.toIndexedSeq, values)
-      dir.getFileSystem(new Configuration()).mkdirs(dir)
+      dir.getFileSystem(hadoopConf).mkdirs(dir)
       new QuirkCsvRenamingWriter(
         s"$dir/.$finalName.attempt-$taskId.tmp", s"$dir/$finalName",
         columns, header, srcIdx, bloomCols, bloomBits, preserveReplaced)
@@ -3008,8 +3021,8 @@ private[sources] class QuirkCsvPartitionedWriter(
         done.foreach { c =>
           try {
             val p = new Path(c.file)
-            if (!p.getFileSystem(new Configuration()).delete(p, false) &&
-              p.getFileSystem(new Configuration()).exists(p))
+            if (!p.getFileSystem(hadoopConf).delete(p, false) &&
+              p.getFileSystem(hadoopConf).exists(p))
               undeleted += c.file
           } catch { case _: Exception => undeleted += c.file }
         }
@@ -3042,7 +3055,7 @@ private[sources] class QuirkCsvWriter(file: String, columns: Array[String],
 
   private val fsPath = new Path(file)
   private val out = {
-    val fs = fsPath.getFileSystem(new Configuration())
+    val fs = fsPath.getFileSystem(hadoopConf)
     val stream = fs.create(fsPath, true)
     val w = new java.io.BufferedWriter(new java.io.OutputStreamWriter(
       stream, java.nio.charset.StandardCharsets.ISO_8859_1), 1 << 16)
@@ -3100,7 +3113,7 @@ private[sources] class QuirkCsvWriter(file: String, columns: Array[String],
 
   override def abort(): Unit = {
     out.close()
-    val fs = fsPath.getFileSystem(new Configuration())
+    val fs = fsPath.getFileSystem(hadoopConf)
     fs.delete(fsPath, false)
   }
 
@@ -3211,7 +3224,7 @@ private[sources] object QuirkCsv {
     * data. */
   def loadSchemaMap(dir: String): Option[QuirkCsvSchemaMap] = {
     val p = new Path(dir, SchemaMapFile)
-    val fs = p.getFileSystem(new Configuration())
+    val fs = p.getFileSystem(hadoopConf)
     if (!fs.exists(p)) return None
     val in = new java.io.BufferedReader(new java.io.InputStreamReader(
       fs.open(p), java.nio.charset.StandardCharsets.ISO_8859_1))
@@ -3242,7 +3255,7 @@ private[sources] object QuirkCsv {
   def writeSchemaMap(dir: String, m: QuirkCsvSchemaMap): Unit = {
     val dst = new Path(dir, SchemaMapFile)
     val tmp = new Path(dir, s".$SchemaMapFile.tmp")
-    val fs = dst.getFileSystem(new Configuration())
+    val fs = dst.getFileSystem(hadoopConf)
     val out = new java.io.BufferedWriter(new java.io.OutputStreamWriter(
       fs.create(tmp, true), java.nio.charset.StandardCharsets.ISO_8859_1))
     try {
@@ -3279,7 +3292,7 @@ private[sources] object QuirkCsv {
     val raw = options.get("path")
     if (raw == null || raw.isEmpty) return None
     val base = new Path(raw)
-    val fs = base.getFileSystem(new Configuration())
+    val fs = base.getFileSystem(hadoopConf)
     if (!fs.exists(base)) return None
     val dir = if (fs.getFileStatus(base).isDirectory) base else base.getParent
     val p = new Path(dir, SchemaMapFile)
@@ -3396,7 +3409,7 @@ private[sources] object QuirkCsv {
     val raw = options.get("path")
     require(raw != null && raw.nonEmpty, "graftcsv requires a 'path' option")
     val path = new Path(raw)
-    val fs: FileSystem = path.getFileSystem(new Configuration())
+    val fs: FileSystem = path.getFileSystem(hadoopConf)
     if (!fs.exists(path)) return Nil
     val st = fs.getFileStatus(path)
     val pcols = partitionColsOf(options)
@@ -3509,7 +3522,7 @@ private[sources] object QuirkCsv {
 
   def readFirstLine(path: String, len: Long): String = {
     val p = new Path(path)
-    val fs = p.getFileSystem(new Configuration())
+    val fs = p.getFileSystem(hadoopConf)
     val in = fs.open(p)
     try {
       val buf = new Array[Byte](math.min(len, 1L << 16).toInt)
@@ -3686,7 +3699,7 @@ private[sources] object QuirkCsv {
 
   def writePartitioning(dir: Path, cols: Seq[String]): Unit = {
     require(cols.nonEmpty, "partitioning marker needs at least one column")
-    val fs = dir.getFileSystem(new Configuration())
+    val fs = dir.getFileSystem(hadoopConf)
     val out = fs.create(new Path(dir, PartitioningFile), true)
     out.write(cols.map(enc).mkString(",")
       .getBytes(java.nio.charset.StandardCharsets.ISO_8859_1))
@@ -3697,7 +3710,7 @@ private[sources] object QuirkCsv {
     * catalog plumbs through `partitionCol` (names stay enc()'d inside
     * the option; [[partitionColsOf]] decodes). */
   def readPartitioning(dir: Path): Option[String] = {
-    val fs = dir.getFileSystem(new Configuration())
+    val fs = dir.getFileSystem(hadoopConf)
     val p = new Path(dir, PartitioningFile)
     if (!fs.exists(p)) None
     else {
@@ -3797,14 +3810,14 @@ private[sources] object QuirkCsv {
   val ClusterFile = "_graft_cluster"
 
   def writeClustering(dir: Path, col: String): Unit = {
-    val fs = dir.getFileSystem(new Configuration())
+    val fs = dir.getFileSystem(hadoopConf)
     val out = fs.create(new Path(dir, ClusterFile), true)
     out.write(enc(col).getBytes(java.nio.charset.StandardCharsets.ISO_8859_1))
     out.close()
   }
 
   def readClustering(dir: Path): Option[String] = {
-    val fs = dir.getFileSystem(new Configuration())
+    val fs = dir.getFileSystem(hadoopConf)
     val p = new Path(dir, ClusterFile)
     if (!fs.exists(p)) None
     else {
@@ -3826,7 +3839,7 @@ private[sources] object QuirkCsv {
   val BloomFile = "_graft_bloom"
 
   def writeBloomCols(dir: Path, cols: Seq[String], bits: Int): Unit = {
-    val fs = dir.getFileSystem(new Configuration())
+    val fs = dir.getFileSystem(hadoopConf)
     val out = fs.create(new Path(dir, BloomFile), true)
     out.write(s"$bits\t${cols.map(enc).mkString(",")}"
       .getBytes(java.nio.charset.StandardCharsets.ISO_8859_1))
@@ -3838,7 +3851,7 @@ private[sources] object QuirkCsv {
     * file: a bloom saturates — never lies — past its capacity, and a
     * saturated bloom prunes nothing. */
   def readBloomCols(dir: Path): (Int, Seq[String]) = {
-    val fs = dir.getFileSystem(new Configuration())
+    val fs = dir.getFileSystem(hadoopConf)
     val p = new Path(dir, BloomFile)
     if (!fs.exists(p)) (QuirkCsvBloom.DefaultBits, Nil)
     else {
@@ -3978,7 +3991,7 @@ private[sources] object QuirkCsv {
   def writeZoneMap(dir: String,
                    entries: Map[String, QuirkCsvZoneEntry]): Unit = {
     val p = new Path(dir, ZoneMapFile)
-    val fs = p.getFileSystem(new Configuration())
+    val fs = p.getFileSystem(hadoopConf)
     val out = new java.io.BufferedWriter(new java.io.OutputStreamWriter(
       fs.create(p, true), java.nio.charset.StandardCharsets.ISO_8859_1))
     try {
@@ -4010,7 +4023,7 @@ private[sources] object QuirkCsv {
     * everything", never to wrong answers. */
   def loadZoneMap(dirOrFile: String): Map[String, QuirkCsvZoneEntry] = try {
     val base = new Path(dirOrFile)
-    val fs = base.getFileSystem(new Configuration())
+    val fs = base.getFileSystem(hadoopConf)
     val dir = if (fs.exists(base) && fs.getFileStatus(base).isDirectory) base
       else base.getParent
     val p = new Path(dir, ZoneMapFile)

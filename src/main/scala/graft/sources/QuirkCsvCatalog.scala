@@ -2,7 +2,6 @@ package graft.sources
 
 import java.util
 
-import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.catalyst.analysis.{NoSuchFunctionException, NoSuchNamespaceException, NoSuchTableException, TableAlreadyExistsException}
 import org.apache.spark.sql.connector.catalog.{FunctionCatalog, Identifier, NamespaceChange, SupportsNamespaces, Table, TableCatalog, TableChange}
@@ -45,7 +44,7 @@ class QuirkCsvCatalog extends TableCatalog with SupportsNamespaces
 
   private var catalogName: String = _
   private var root: Path = _
-  private def fs = root.getFileSystem(new Configuration())
+  private def fs = root.getFileSystem(hadoopConf)
 
   override def initialize(name: String,
                           options: CaseInsensitiveStringMap): Unit = {

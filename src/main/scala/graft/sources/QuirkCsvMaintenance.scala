@@ -1,6 +1,5 @@
 package graft.sources
 
-import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.SparkSession
 
@@ -99,7 +98,7 @@ private[graft] object QuirkCsvMaintenance {
     // instead — a plain directory with no marker, where this protocol
     // applies unchanged.
     require(!new Path(dir, QuirkCsv.PartitioningFile)
-      .getFileSystem(new Configuration())
+      .getFileSystem(hadoopConf)
       .exists(new Path(dir, QuirkCsv.PartitioningFile)),
       s"$dir is a PARTITIONED graftcsv table root — compact its " +
         "<col>=<value> subdirectories individually, never the root " +
@@ -197,7 +196,7 @@ private[graft] object QuirkCsvMaintenance {
   /** Visible (non-hidden) data file names in `dir`, sorted. */
   private[graft] def dataFileNames(dir: String): Seq[String] = {
     val p = new Path(dir)
-    val fs = p.getFileSystem(new Configuration())
+    val fs = p.getFileSystem(hadoopConf)
     if (!fs.exists(p)) return Nil
     fs.listStatus(p).toIndexedSeq
       .filter(s => s.isFile && !s.getPath.getName.startsWith("_") &&
@@ -213,7 +212,7 @@ private[graft] object QuirkCsvMaintenance {
                                    numFiles: Int,
                                    sortBy: Option[String] = None): Unit = {
     val base = new Path(dir)
-    val fs = base.getFileSystem(new Configuration())
+    val fs = base.getFileSystem(hadoopConf)
     val tmp = new Path(base, TmpDirName)
     // an earlier fold that died before its intent became durable never
     // became part of the table (its originals are all still in place) —
@@ -348,7 +347,7 @@ private[graft] object QuirkCsvMaintenance {
     * fail LOUDLY with the file left in place — see the object doc. */
   private[graft] def recoverPendingSwap(dir: String): Unit = {
     val base = new Path(dir)
-    val fs = base.getFileSystem(new Configuration())
+    val fs = base.getFileSystem(hadoopConf)
     val intent = new Path(base, IntentFile)
     if (!fs.exists(intent)) {
       val tmp = new Path(base, TmpDirName)
@@ -469,7 +468,7 @@ private[graft] object QuirkCsvMaintenance {
     * this log being complete, so guessing would risk duplicates. */
   private[graft] def loadFoldLog(dir: String): Seq[(Seq[String], Seq[String])] = {
     val logDir = new Path(new Path(dir), FoldLogDirName)
-    val fs = logDir.getFileSystem(new Configuration())
+    val fs = logDir.getFileSystem(hadoopConf)
     if (!fs.exists(logDir)) return Nil
     fs.listStatus(logDir).toIndexedSeq
       .filter(s => s.isFile && s.getPath.getName.startsWith("fold-"))
@@ -499,7 +498,7 @@ private[graft] object QuirkCsvMaintenance {
 
   private def deleteNamed(dir: String, names: Seq[String]): Unit = {
     val base = new Path(dir)
-    val fs = base.getFileSystem(new Configuration())
+    val fs = base.getFileSystem(hadoopConf)
     names.foreach { n =>
       val p = new Path(base, n)
       if (fs.exists(p)) fs.delete(p, false)

@@ -2,7 +2,6 @@ package graft.sources
 
 import java.util
 
-import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
@@ -108,7 +107,7 @@ private[sources] object QuirkCsvProcedures {
     override def call(input: InternalRow): util.Iterator[Scan] = {
       val table = input.getUTF8String(0).toString
       val dir = cat.resolveTableDir(table)
-      val fs = dir.getFileSystem(new Configuration())
+      val fs = dir.getFileSystem(hadoopConf)
       val out: Seq[InternalRow] = procName match {
         case "history" =>
           QuirkCsvVersions.readLog(fs, dir).map(e =>

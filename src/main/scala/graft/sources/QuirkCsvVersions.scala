@@ -202,7 +202,7 @@ object QuirkCsvVersions {
     val c = spark.sessionState.catalogManager.catalog(cat)
       .asInstanceOf[QuirkCsvCatalog]
     val dir = c.resolveTableDir(table)
-    currentVersion(dir.getFileSystem(spark.sessionState.newHadoopConf()),
+    currentVersion(dir.getFileSystem(hadoopConf),
       dir)
   }
 
@@ -985,7 +985,7 @@ object QuirkCsvVersions {
                       root: String, from: Long, to: Long)
   : (Seq[QuirkCsvFileMeta], Seq[QuirkCsvFileMeta]) = {
     val p = new Path(root)
-    val fs = p.getFileSystem(new org.apache.hadoop.conf.Configuration())
+    val fs = p.getFileSystem(hadoopConf)
     val live = QuirkCsv.listFiles(readOptions(fs, p))
     val a = snapshotListing(fs, p, from, live)
     val b = snapshotListing(fs, p, to, live)
@@ -1001,7 +1001,7 @@ object QuirkCsvVersions {
     * source-private). */
   def liveListing(root: String): Seq[QuirkCsvFileMeta] = {
     val p = new Path(root)
-    val fs = p.getFileSystem(new org.apache.hadoop.conf.Configuration())
+    val fs = p.getFileSystem(hadoopConf)
     QuirkCsv.listFiles(readOptions(fs, p))
   }
 
@@ -1027,7 +1027,7 @@ object QuirkCsvVersions {
               from: Long, to: Long): org.apache.spark.sql.DataFrame = {
     import org.apache.spark.sql.functions.lit
     val p = new Path(root)
-    val fs = p.getFileSystem(new org.apache.hadoop.conf.Configuration())
+    val fs = p.getFileSystem(hadoopConf)
     val opts = readOptions(fs, p)
     val schema = new QuirkCsvDataSource().inferSchema(opts)
     def snapshotDf(v: Long) = {
@@ -1059,7 +1059,7 @@ object QuirkCsvVersions {
   def history(spark: org.apache.spark.sql.SparkSession,
               root: String): org.apache.spark.sql.DataFrame = {
     val p = new Path(root)
-    val fs = p.getFileSystem(new org.apache.hadoop.conf.Configuration())
+    val fs = p.getFileSystem(hadoopConf)
     val rows = readLog(fs, p).map(e =>
       (e.version, e.action, new java.sql.Timestamp(e.ts),
         e.added.size.toLong, (e.retired.size + e.replaced.size).toLong))

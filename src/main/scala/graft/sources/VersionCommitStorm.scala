@@ -1,6 +1,5 @@
 package graft.sources
 
-import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 
 /** Child-process body for the CROSS-PROCESS versioning spec: a plain
@@ -22,7 +21,7 @@ object VersionCommitStorm {
     val Array(root, writerId, nStr) = args
     val n = nStr.toInt
     val dir = new Path(root)
-    val fs = dir.getFileSystem(new Configuration())
+    val fs = dir.getFileSystem(hadoopConf)
     (1 to n).foreach { i =>
       val f = new Path(dir, s"part-w$writerId-$i.csv")
       val out = fs.create(f, false)

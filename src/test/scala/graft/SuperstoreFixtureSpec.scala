@@ -7,6 +7,7 @@ import org.apache.spark.JobCounter
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.columnar.{InMemoryRelation, InMemoryTableScanExec}
 import org.apache.spark.sql.execution.joins.BaseJoinExec
 import org.apache.spark.sql.execution.window.WindowExec
 import org.apache.spark.sql.functions._
@@ -116,6 +117,45 @@ class SuperstoreFixtureSpec extends SparkSpec {
           sSchema shouldBe bSchema
           sRows shouldBe bRows
         }
+      }
+    }
+  }
+
+  test("the fact and the marts read the seven dims through their caches") {
+    // a cache is identified by its cached physical plan, one object per entry
+    def cacheOf(name: String, dim: DataFrame): SparkPlan =
+      spark.sessionState.executePlan(dim.queryExecution.analyzed)
+        .withCachedData match {
+        case r: InMemoryRelation => r.cachedPlan
+        case other => fail(s"$name dim is not cached: ${other.nodeName}")
+      }
+    def reads(caches: Seq[SparkPlan], name: String, dim: DataFrame): Boolean =
+      caches.exists(_ eq cacheOf(name, dim))
+    def cachesRead(df: DataFrame): Seq[SparkPlan] =
+      df.queryExecution.withCachedData.collect {
+        case r: InMemoryRelation => r.cachedPlan
+      }
+    // planning only, no action: the lazy day-1 outputs serve as day-2 priors
+    val d1 = Pipeline.run(spark, day1)
+    val d2 = Pipeline.runIncremental(spark, day2, d1.dims, d1.fact, runDate)
+    for ((day, o) <- Seq("day 1" -> d1, "day 2" -> d2)) withClue(s"$day: ") {
+      val d = o.dims
+      // the five dims the fact joins, each through its own cache
+      val factReads = cachesRead(o.fact)
+      Seq("geography" -> d.geography, "shipMode" -> d.shipMode,
+        "subCategory" -> d.subCategory, "customer" -> d.customer,
+        "product" -> d.product).foreach { case (name, dim) =>
+        withClue(s"fact -> $name: ")(reads(factReads, name, dim) shouldBe true)
+      }
+      // category reaches the fact inside the cached sub-category dim
+      val subCategoryReads = FinalPlan.collect(
+        cacheOf("subCategory", d.subCategory)) {
+        case s: InMemoryTableScanExec => s.relation.cachedPlan
+      }
+      reads(subCategoryReads, "category", d.category) shouldBe true
+      // the date dim is read by the date-based marts
+      Seq(o.rolling30, o.customerCohort).foreach { mart =>
+        reads(cachesRead(mart), "date", d.date) shouldBe true
       }
     }
   }
