@@ -152,23 +152,18 @@ object IvfIndex {
                  name: String): DataFrame =
     spark.table(asgTbl(cat, ns, name))
 
-  /** Conf key: serves (topK / semanticDupPairs / driftReport) read the
-    * index tables AS OF their last COMMITTED version (default true) —
-    * the [[NearDupIndex.SnapshotServeKey]] contract for the IVF family:
-    * a reader racing a batch overwrite (or retrain's centroid
-    * overwrite) sees a committed state or fails loudly, never a torn
-    * double-counted one. See [[IndexSnapshots]]. */
-  val SnapshotServeKey = "spark.graft.ivf.snapshotServe"
-
+  /** Serves (topK / semanticDupPairs / driftReport) read the index
+    * tables AS OF their last COMMITTED version: a reader racing a batch
+    * overwrite (or retrain's centroid overwrite) sees a committed state
+    * or fails loudly, never a torn double-counted one. See
+    * [[IndexSnapshots]]. */
   private def assignmentForServe(spark: SparkSession, cat: String,
                                  ns: String, name: String): DataFrame =
-    IndexSnapshots.pinned(spark, cat, ns, s"${name}_assign",
-      SnapshotServeKey)
+    IndexSnapshots.pinned(spark, cat, ns, s"${name}_assign")
 
   private def centroidsForServe(spark: SparkSession, cat: String,
                                 ns: String, name: String): DataFrame =
-    IndexSnapshots.pinned(spark, cat, ns, s"${name}_centroids",
-      SnapshotServeKey)
+    IndexSnapshots.pinned(spark, cat, ns, s"${name}_centroids")
       .select(col("centroid_id"),
         decodeEmb(col("emb")).as("centroid_emb"))
 

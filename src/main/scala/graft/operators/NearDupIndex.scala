@@ -46,8 +46,8 @@ import org.apache.spark.sql.functions._
   * clusters on more keys than the storage partitions on, so the
   * shuffle-free plan needs
   * `spark.sql.requireAllClusterKeysForCoPartition=false` — the serves
-  * set it themselves from the index meta ([[ManageSpjConfsKey]]);
-  * results are identical either way, the conf only gates plan shape.
+  * set it themselves from the index meta (`ensureSpjConfs`); results
+  * are identical either way, the conf only gates plan shape.
   *
   * The two-level layout keeps BOTH maintenance properties the old
   * single-level bucketed flavor traded away: a re-delivered batch is
@@ -55,8 +55,8 @@ import org.apache.spark.sql.functions._
   * converges even for revised content), and retention is a
   * METADATA-ONLY partial-spec delete of the `batch=<b>` leaf dirs.
   * Serves additionally pin the LAST COMMITTED VERSION
-  * ([[SnapshotServeKey]]), so a reader concurrent with a replay sees
-  * the old batch or the new batch, never a torn in-between. */
+  * (`bandsForServe`), so a reader concurrent with a replay sees the old
+  * batch or the new batch, never a torn in-between. */
 object NearDupIndex {
 
   // every piece interpolated into SQL text is validated to the
@@ -245,27 +245,15 @@ object NearDupIndex {
             name: String): DataFrame =
     spark.table(bandsTbl(cat, ns, name))
 
-  /** Conf key: serves read the band table AS OF its last COMMITTED
-    * version (default true). An in-flight batch land makes its new
-    * files task-visible before the job commit retires the replaced
-    * ones; a current-table read racing that window could double-count
-    * a batch. The snapshot pin resolves the file set from the version
-    * log instead — a concurrent reader sees the old batch or the new
-    * batch, NEVER a torn in-between. The residual race is loud, not
-    * silent: if a replay commits while the pinned read is running, the
-    * pinned files may have moved to the attic mid-scan and the read
-    * fails with FileNotFoundException — retry it (the next pin resolves
-    * the new version). Cost: one tiny log read per serve (partition
-    * pruning on `batch` still applies at planning). */
-  val SnapshotServeKey = "spark.graft.neardup.snapshotServe"
-
-  /** The band table as serves read it (see [[SnapshotServeKey]] and
-    * [[IndexSnapshots]] for the pin-and-retry contract), with the
-    * pinned version — the key into the per-version stored audit. */
+  /** The band table as serves read it: AS OF its last COMMITTED
+    * version (see [[IndexSnapshots]] for the pin-and-retry contract),
+    * with that version — the key into the per-version stored audit. A
+    * reader concurrent with a replay sees the old batch or the new
+    * batch, NEVER a torn in-between. Cost: one tiny log read per serve
+    * (partition pruning on `batch` still applies at planning). */
   private def bandsForServe(spark: SparkSession, cat: String, ns: String,
-                            name: String): (DataFrame, Option[Long]) =
-    IndexSnapshots.pinnedWithVersion(spark, cat, ns, s"${name}_bands",
-      SnapshotServeKey)
+                            name: String): (DataFrame, Long) =
+    IndexSnapshots.pinnedWithVersion(spark, cat, ns, s"${name}_bands")
 
   private lazy val log = org.slf4j.LoggerFactory.getLogger(getClass)
 
@@ -318,17 +306,15 @@ object NearDupIndex {
     * sealed row for `v` (pre-audit index, racing refresh, torn sidecar
     * read) — callers fall back to computing over their pinned frame. */
   private def storedAuditRow(spark: SparkSession, cat: String, ns: String,
-                             name: String, v: Option[Long])
+                             name: String, v: Long)
   : Option[(Long, Long, Long)] =
-    v.flatMap { vv =>
-      try {
-        spark.table(auditTbl(cat, ns, name))
-          .filter(col("v") === vv.toString)
-          .collect().headOption
-          .map(r => (r.getString(0).toLong, r.getString(1).toLong,
-            r.getString(2).toLong))
-      } catch { case _: Exception => None }
-    }
+    try {
+      spark.table(auditTbl(cat, ns, name))
+        .filter(col("v") === v.toString)
+        .collect().headOption
+        .map(r => (r.getString(0).toLong, r.getString(1).toLong,
+          r.getString(2).toLong))
+    } catch { case _: Exception => None }
 
   /** One-row audit of what the pinned hot-band cap discards from THIS
     * index's current band table: `(max_bucket, n_buckets_dropped,
@@ -344,8 +330,8 @@ object NearDupIndex {
       if (cap <= 0) None
       else try {
         storedAuditRow(spark, cat, ns, name,
-          Some(graft.sources.QuirkCsvVersions.currentVersionOf(
-            spark, cat, s"$ns.${name}_bands")))
+          graft.sources.QuirkCsvVersions.currentVersionOf(
+            spark, cat, s"$ns.${name}_bands"))
       } catch { case _: Exception => None }
     stored match {
       case Some((mb, n, p)) =>
@@ -355,12 +341,6 @@ object NearDupIndex {
         NearDup.hotBandAudit(bands(spark, cat, ns, name), cap)
     }
   }
-
-  /** Conf key: serves WARN-log the saturation audit when the pinned cap
-    * is on (default true). With a stored per-version audit this is a
-    * one-row pruned read; only the fallback (no stored row) aggregates,
-    * and then over the SAME pinned frame the serve reads. */
-  val LogSaturationKey = "spark.graft.neardup.logSaturation"
 
   private def warnSaturation(cat: String, ns: String, name: String,
                              cap: Long, nDropped: Long,
@@ -375,35 +355,33 @@ object NearDupIndex {
   /** Serve-side cap application: drop the pinned version's saturated
     * buckets (from the STORED list — zero aggregation over the band
     * table; an audited-clean version skips the exclusion join entirely)
-    * and WARN-log the stored audit. Falls back to computing both over
-    * the pinned frame itself when no stored row exists. */
+    * and WARN-log the stored audit (a one-row pruned read). Falls back
+    * to computing both over the pinned frame itself when no stored row
+    * exists. */
   private def dropHotForServe(spark: SparkSession, cat: String, ns: String,
                               name: String, bandsDf: DataFrame,
-                              pinnedV: Option[Long], cap: Long): DataFrame = {
+                              pinnedV: Long, cap: Long): DataFrame = {
     if (cap <= 0) return bandsDf
-    val logOn = spark.conf.get(LogSaturationKey, "true").toBoolean
     storedAuditRow(spark, cat, ns, name, pinnedV) match {
       case Some((_, nDropped, pDropped)) =>
-        if (logOn) warnSaturation(cat, ns, name, cap, nDropped, pDropped)
+        warnSaturation(cat, ns, name, cap, nDropped, pDropped)
         if (nDropped == 0L) bandsDf // audited clean: nothing to exclude
         else {
           val hot = spark.table(hotTbl(cat, ns, name))
-            .filter(col("v") === lit(pinnedV.get.toString))
+            .filter(col("v") === lit(pinnedV.toString))
             .select(col("band_id"), col("band_key"))
           bandsDf.join(broadcast(hot), Seq("band_id", "band_key"),
             "left_anti")
         }
       case None =>
-        if (logOn) {
-          val r = NearDup.hotBandAudit(bandsDf, cap).collect()(0)
-          warnSaturation(cat, ns, name, cap, r.getLong(1), r.getLong(2))
-        }
+        val r = NearDup.hotBandAudit(bandsDf, cap).collect()(0)
+        warnSaturation(cat, ns, name, cap, r.getLong(1), r.getLong(2))
         NearDup.dropHotBands(bandsDf, cap)
     }
   }
 
-  /** Conf key: the co-located (joinBuckets > 0) serves SET the two
-    * plan-shape confs their storage-partitioned join needs
+  /** The co-located (joinBuckets > 0) serves SET the two plan-shape
+    * confs their storage-partitioned join needs
     * (`spark.sql.sources.v2.bucketing.enabled=true`,
     * `spark.sql.requireAllClusterKeysForCoPartition=false`) instead of
     * relying on the caller — a caller who forgot them silently paid the
@@ -411,32 +389,26 @@ object NearDupIndex {
     * confs cannot be set-and-restored around a LAZY serve (planning
     * happens at the caller's action), so they are set session-wide and
     * the change is INFO-logged; both only gate plan shape, never
-    * results. `false` opts out. */
-  val ManageSpjConfsKey = "spark.graft.neardup.manageSpjConfs"
-
+    * results. */
   private def ensureSpjConfs(spark: SparkSession): Unit =
-    if (spark.conf.get(ManageSpjConfsKey, "true").toBoolean) {
-      Seq("spark.sql.sources.v2.bucketing.enabled" -> "true",
-        "spark.sql.requireAllClusterKeysForCoPartition" -> "false")
-        .foreach { case (k, v) =>
-          if (spark.conf.getOption(k).forall(_ != v)) {
-            // getOption surfaces registered DEFAULTS too — `contains`
-            // checks the explicit override map, so only a value the
-            // caller actually chose earns the louder WARN about this
-            // serve changing plan shape for the rest of their session
-            if (spark.sessionState.conf.contains(k))
-              log.warn(s"co-located near-dup serve: overriding " +
-                s"explicitly-set $k=${spark.conf.get(k)} with $v " +
-                "session-wide (plan-shape only; " +
-                "spark.graft.neardup.manageSpjConfs=false opts out)")
-            else
-              log.info(s"co-located near-dup serve: setting $k=$v (plan-" +
-                "shape only; spark.graft.neardup.manageSpjConfs=false " +
-                "opts out)")
-            spark.conf.set(k, v)
-          }
+    Seq("spark.sql.sources.v2.bucketing.enabled" -> "true",
+      "spark.sql.requireAllClusterKeysForCoPartition" -> "false")
+      .foreach { case (k, v) =>
+        if (spark.conf.getOption(k).forall(_ != v)) {
+          // getOption surfaces registered DEFAULTS too — `contains`
+          // checks the explicit override map, so only a value the
+          // caller actually chose earns the louder WARN about this
+          // serve changing plan shape for the rest of their session
+          if (spark.sessionState.conf.contains(k))
+            log.warn(s"co-located near-dup serve: overriding " +
+              s"explicitly-set $k=${spark.conf.get(k)} with $v " +
+              "session-wide (plan-shape only)")
+          else
+            log.info(s"co-located near-dup serve: setting $k=$v (plan-" +
+              "shape only)")
+          spark.conf.set(k, v)
         }
-    }
+      }
 
   /** Candidate near-dup pairs TOUCHING `batch`: the batch's bands
     * (partition-pruned — one value directory) joined against the whole

@@ -4,7 +4,7 @@ import scala.collection.mutable
 
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Ascending, Attribute, BaseOrdering, Expression, RowOrdering, SortOrder, UnsafeProjection, UnsafeRow}
+import org.apache.spark.sql.catalyst.expressions.{Attribute, BaseOrdering, Expression, RowOrdering, SortOrder, UnsafeProjection, UnsafeRow}
 import org.apache.spark.sql.catalyst.optimizer.NormalizeNaNAndZero
 import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, UnaryNode}
 import org.apache.spark.sql.catalyst.plans.physical.{ClusteredDistribution, Distribution, UnspecifiedDistribution}
@@ -83,12 +83,10 @@ case class GroupedTopKNode(
 object GroupedTopKStrategy extends SparkStrategy {
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
     case GroupedTopKNode(g, o, k, child, ties) =>
-      val sortFinal = org.apache.spark.sql.internal.SQLConf.get
-        .getConfString(GroupedTopKExec.SortFinalConf, "false").toBoolean
       GroupedTopKExec(g, o, k, partial = false,
         GroupedTopKExec(g, o, k, partial = true, planLater(child),
           withTies = ties),
-        sortFinal = sortFinal, withTies = ties) :: Nil
+        withTies = ties) :: Nil
     case _ => Nil
   }
 }
@@ -155,14 +153,10 @@ object GroupedTopKFilterPushdown
   * UnsafeRow canonicalization only — group by the fields directly if
   * that matters.)
   *
-  * Spill posture: the hash final pass holds k rows per group of one
-  * shuffle partition in memory. That is the fast path for bounded group
-  * cardinality; for high-cardinality keys (top-k per document at
-  * 100 TB) either raise `spark.sql.shuffle.partitions` so groups ×
-  * k rows fit per reducer, or set [[GroupedTopKExec.SortFinalConf]]:
-  * the final pass then REQUIRES a sort by group key — Spark's external
-  * (spilling) sort — and streams one group at a time holding a single
-  * k-row heap, O(k) reducer memory regardless of group count.
+  * Memory posture: the final pass holds k rows per group of one
+  * shuffle partition in memory. For high-cardinality keys (top-k per
+  * document at 100 TB) raise `spark.sql.shuffle.partitions` so groups ×
+  * k rows fit per reducer.
   */
 case class GroupedTopKExec(
     groupExprs: Seq[Expression],
@@ -170,7 +164,6 @@ case class GroupedTopKExec(
     k: Int,
     partial: Boolean,
     child: SparkPlan,
-    sortFinal: Boolean = false,
     withTies: Boolean = false) extends UnaryExecNode {
 
   override def output: Seq[Attribute] = child.output
@@ -188,11 +181,6 @@ case class GroupedTopKExec(
   override def requiredChildDistribution: Seq[Distribution] =
     if (partial) UnspecifiedDistribution :: Nil
     else ClusteredDistribution(normalizedGroupExprs) :: Nil
-
-  override def requiredChildOrdering: Seq[Seq[SortOrder]] =
-    if (!partial && sortFinal)
-      Seq(normalizedGroupExprs.map(SortOrder(_, Ascending)))
-    else Seq(Nil)
 
   override def outputPartitioning = child.outputPartitioning
 
@@ -222,24 +210,16 @@ case class GroupedTopKExec(
     val o = order
     val kk = k
     val ties = withTies
-    val streamSorted = !partial && sortFinal
     val numOutputRows = longMetric("numOutputRows")
     val numFlushes = longMetric("numFlushes")
     child.execute().mapPartitions(
       iter =>
-        if (streamSorted)
-          GroupedTopKExec.sortedTopKIterator(
-            iter,
-            UnsafeProjection.create(g, childOutput),
-            RowOrdering.create(o, childOutput),
-            kk, numOutputRows, withTies = ties, tieCap = tieCap)
-        else
-          GroupedTopKExec.topKIterator(
-            iter,
-            UnsafeProjection.create(g, childOutput),
-            RowOrdering.create(o, childOutput),
-            kk, flushCap, numOutputRows, numFlushes,
-            withTies = ties, tieCap = tieCap),
+        GroupedTopKExec.topKIterator(
+          iter,
+          UnsafeProjection.create(g, childOutput),
+          RowOrdering.create(o, childOutput),
+          kk, flushCap, numOutputRows, numFlushes,
+          withTies = ties, tieCap = tieCap),
       preservesPartitioning = true)
   }
 
@@ -257,13 +237,6 @@ object GroupedTopKExec {
   /** Partial-pass flush threshold: max distinct groups held per input
     * partition before the heap map is emitted and restarted. */
   val MaxGroupsConf = "spark.graft.topk.maxGroupsPerPartition"
-
-  /** When true, the FINAL pass requires a (spilling, external) sort by
-    * group key and streams one group's k-row heap at a time — O(k)
-    * reducer memory for any group cardinality, at the cost of sorting
-    * the partial-pass survivors. The hash final pass (default) is
-    * faster when k × groups-per-reducer fits in memory. */
-  val SortFinalConf = "spark.graft.topk.sortFinal"
 
   /** Rank mode only: max rows tying the k-th-best order value held per
     * group. The partial pass FLUSHES on overflow (correct under
@@ -420,69 +393,11 @@ object GroupedTopKExec {
           overflowed = true
           // cap-pressure signal: nonzero means this partition saw more
           // distinct groups (or wider boundary ties) than the cap — at
-          // cluster scale, the cue to raise shuffle partitions or
-          // switch to sortFinal
+          // cluster scale, the cue to raise shuffle partitions
           if (numFlushes != null) numFlushes += 1
         }
       }
       heaps.valuesIterator.flatMap(_.drain())
-    }
-  }
-
-  /** Final pass over input SORTED by group key (the [[SortFinalConf]]
-    * path): each group's rows arrive contiguously, so a single size-k
-    * heap suffices — O(k) memory however many groups a partition holds;
-    * the spill burden lives in the upstream external sort. */
-  def sortedTopKIterator(
-      input: Iterator[InternalRow],
-      keyProj: UnsafeProjection,
-      ord: BaseOrdering,
-      k: Int,
-      numOutputRows: SQLMetric,
-      withTies: Boolean = false,
-      tieCap: Int = Int.MaxValue): Iterator[InternalRow] = new Iterator[InternalRow] {
-
-    private var curKey: UnsafeRow = _
-    private var state = new TopKHeap(k, withTies, ord)
-    private var out: Iterator[InternalRow] = Iterator.empty
-
-    // this is always the exact final pass: tie overflow fails fast
-    private def add(row: InternalRow): Unit =
-      if (!state.add(row.copy(), tieCap)) throw tieOverflowError(tieCap)
-
-    private def drain(): Iterator[InternalRow] = {
-      val it = state.drain()
-      state = new TopKHeap(k, withTies, ord)
-      it
-    }
-
-    override def hasNext: Boolean = {
-      while (!out.hasNext && (input.hasNext || curKey != null)) {
-        if (!input.hasNext) {
-          out = drain()
-          curKey = null
-        } else {
-          val row = input.next()
-          val key = keyProj(row) // projection reuses its buffer
-          if (curKey == null) {
-            curKey = key.copy()
-            add(row)
-          } else if (key == curKey) { // bytewise UnsafeRow equality
-            add(row)
-          } else {
-            out = drain()
-            curKey = key.copy()
-            add(row)
-          }
-        }
-      }
-      out.hasNext
-    }
-
-    override def next(): InternalRow = {
-      if (!hasNext) throw new NoSuchElementException("empty iterator")
-      numOutputRows += 1
-      out.next()
     }
   }
 }

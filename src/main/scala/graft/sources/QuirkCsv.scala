@@ -990,17 +990,7 @@ private[sources] class QuirkCsvScan(fullSchema: StructType,
     new QuirkCsvReaderFactory(
       QuirkCsv.readerColumns(options, fullSchema.fieldNames),
       required.fieldNames,
-      filters ++ runtimeFilters, header, excelCompat, limit, topN,
-      // columnar=true: emit reused flat ColumnarBatch vectors instead of
-      // per-row objects (see QuirkCsvColumnarReader). STAYS opt-in by
-      // measurement: on a 876 MB / 4M-row / 21-col fixture with a
-      // non-pushable all-column consumer, row 4.94 s vs columnar 4.97 s
-      // (PLANS.md, AQE-stage-reuse corrected) — the latin-1 field
-      // PARSE dominates and the batch handoff it replaces is noise, so
-      // flipping the default would buy nothing until the parse itself
-      // vectorizes
-      columnar = options.getBoolean("columnar", false),
-      columnarBatchSize = options.getInt("columnarBatchSize", 4096))
+      filters ++ runtimeFilters, header, excelCompat, limit, topN)
 
   override def supportedCustomMetrics(): Array[CustomMetric] =
     Array(new QuirkCsvRowsEmittedMetric, new QuirkCsvRowsFilteredMetric)
@@ -1057,9 +1047,7 @@ private[sources] class QuirkCsvReaderFactory(allColumns: Array[String],
                                              excelCompat: Boolean,
                                              limit: Int = -1,
                                              topN: Option[QuirkCsvTopN] =
-                                               None,
-                                             columnar: Boolean = false,
-                                             columnarBatchSize: Int = 4096)
+                                               None)
   extends PartitionReaderFactory {
 
   override def createReader(partition: InputPartition)
@@ -1077,23 +1065,6 @@ private[sources] class QuirkCsvReaderFactory(allColumns: Array[String],
         case Some(t) => new QuirkCsvTopNReader(rows, requiredColumns, t)
         case None => rows
       }
-  }
-
-  // columnar output is offered only for the plain scan shape: a pushed
-  // top-N needs the heap's row comparator, a pushed limit's early
-  // stop composes more simply row-wise, and grouped (SPJ) splits chain
-  // several files through one row reader
-  override def supportColumnarReads(partition: InputPartition): Boolean =
-    columnar && topN.isEmpty && limit < 0 &&
-      !partition.isInstanceOf[QuirkCsvGroupedPartition]
-
-  override def createColumnarReader(partition: InputPartition)
-  : PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] = {
-    val p = partition.asInstanceOf[QuirkCsvPartition]
-    new QuirkCsvColumnarReader(
-      new QuirkCsvReader(p, allColumns, requiredColumns, filters,
-        header, excelCompat, limit, materializeRow = false),
-      columnarBatchSize)
   }
 }
 
@@ -1146,61 +1117,6 @@ private[sources] class QuirkCsvChainedReader(files: Array[QuirkCsvFileMeta],
   }
 
   override def close(): Unit = if (cur != null) { cur.close(); cur = null }
-}
-
-/** Batched output over the same parse/filter loop: parsed fields land
-  * directly in reused on-heap column vectors, skipping the per-row
-  * `GenericInternalRow` + per-field `UTF8String` object graph the row
-  * path allocates (the batch's memory is flat and recycled, so the scan
-  * stops generating per-row garbage). Downstream, Spark's codegen reads
-  * the vectors via `ColumnarToRow` without materializing rows either.
-  * The parse itself stays scalar — a vectorized CSV parser is the next
-  * rung, not a prerequisite for the batched interface. */
-private[sources] class QuirkCsvColumnarReader(inner: QuirkCsvReader,
-                                              batchSize: Int)
-  extends PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] {
-
-  private val nCols = inner.requiredIdx.length
-  private val vectors =
-    org.apache.spark.sql.execution.vectorized.OnHeapColumnVector
-      .allocateColumns(batchSize, StructType(
-        (0 until nCols).map(i => StructField(s"c$i", StringType))))
-  private val batch = new org.apache.spark.sql.vectorized.ColumnarBatch(
-    vectors.map(v => v: org.apache.spark.sql.vectorized.ColumnVector))
-  private val filePathBytes = inner.filePathBytes
-
-  override def next(): Boolean = {
-    var i = 0
-    var c = 0
-    while (c < nCols) { vectors(c).reset(); c += 1 }
-    while (i < batchSize && inner.next()) {
-      val fields = inner.currentFields
-      c = 0
-      while (c < nCols) {
-        val idx = inner.requiredIdx(c)
-        if (idx < 0) // `_file` metadata column
-          vectors(c).putByteArray(i, filePathBytes)
-        else if (idx >= fields.length || fields(idx) == null)
-          vectors(c).putNull(i)
-        else {
-          val b = fields(idx)
-            .getBytes(java.nio.charset.StandardCharsets.UTF_8)
-          vectors(c).putByteArray(i, b)
-        }
-        c += 1
-      }
-      i += 1
-    }
-    batch.setNumRows(i)
-    i > 0
-  }
-
-  override def get(): org.apache.spark.sql.vectorized.ColumnarBatch = batch
-
-  override def currentMetricsValues(): Array[CustomTaskMetric] =
-    inner.currentMetricsValues()
-
-  override def close(): Unit = { batch.close(); inner.close() }
 }
 
 /** Bounded per-split top-N over the row reader: a `n`-capped heap under
@@ -1293,8 +1209,7 @@ private[sources] class QuirkCsvReader(part: QuirkCsvPartition,
                                       filters: Array[Filter],
                                       header: Boolean,
                                       excelCompat: Boolean,
-                                      limit: Int = -1,
-                                      materializeRow: Boolean = true)
+                                      limit: Int = -1)
   extends PartitionReader[InternalRow] {
 
   // per-task observability (rowsEmitted / rowsFiltered custom metrics)
@@ -1336,14 +1251,9 @@ private[sources] class QuirkCsvReader(part: QuirkCsvPartition,
 
   private val colIndex = allColumns.zipWithIndex.toMap
   // -1 marks the `_file` metadata column (emitted as this split's path)
-  private[sources] val requiredIdx = requiredColumns.map(c =>
+  private val requiredIdx = requiredColumns.map(c =>
     if (c == QuirkCsvFileColumn.name()) -1 else colIndex(c))
   private val filePathUtf8 = UTF8String.fromString(part.path)
-  private[sources] def filePathBytes: Array[Byte] =
-    part.path.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-  // the parsed fields of the current row (the columnar reader consumes
-  // these directly; valid after next() returns true)
-  private[sources] var currentFields: Array[String] = _
   // filters compile ONCE per reader: In value lists become hash sets —
   // a dynamic-pruning join can deliver thousands of keys, and a per-row
   // linear `exists` would make the scan O(rows × |In-set|)
@@ -1410,8 +1320,7 @@ private[sources] class QuirkCsvReader(part: QuirkCsvPartition,
       if (keep) {
         val fields = QuirkCsv.parseLine(stripped, allColumns.length)
         if (passesFilters(fields)) {
-          currentFields = fields
-          if (materializeRow) current = buildRow(fields)
+          current = buildRow(fields)
           emitted += 1
           return true
         } else filteredOut += 1

@@ -86,20 +86,6 @@ class GroupedTopKSpec extends SparkSpec {
     } finally spark.conf.unset(key)
   }
 
-  test("rank mode: sortFinal streaming path keeps ties too") {
-    val tied = spark.range(0, 1000, 1, 4)
-      .select((col("id") % 20).as("g"), (col("id") % 7).as("v"), col("id"))
-    val expect = sortedRows(tied
-      .withColumn("rk", rank().over(
-        Window.partitionBy("g").orderBy(col("v").desc)))
-      .filter(col("rk") <= 3).drop("rk"))
-    spark.conf.set(GroupedTopKExec.SortFinalConf, "true")
-    try {
-      sortedRows(TopK.perGroupWithTies(tied.toDF(), Seq(col("g")),
-        Seq(col("v").desc), 3)) shouldBe expect
-    } finally spark.conf.unset(GroupedTopKExec.SortFinalConf)
-  }
-
   test("rank mode: degenerate constant order fails fast in the final pass") {
     val flat = spark.range(0, 5000, 1, 4)
       .select(lit("one").as("g"), lit(0L).as("v"), col("id"))
@@ -196,33 +182,6 @@ class GroupedTopKSpec extends SparkSpec {
       .filter(col("rn") <= 1).drop("rn")
     topk.count() shouldBe 3L // {0.0,-0.0}, {NaN}, {1.0}
     sortedRows(topk.select("id")) shouldBe sortedRows(expect.select("id"))
-  }
-
-  test("sortFinal: streaming-sorted final pass matches the hash final") {
-    spark.conf.set(GroupedTopKExec.SortFinalConf, "true")
-    try {
-      val topk = TopK.perGroup(data, Seq(col("g")),
-        Seq(col("v").desc, col("id")), 5)
-      sortedRows(topk) shouldBe sortedRows(windowed(5))
-      topk.collect()
-      val plan = topk.queryExecution.executedPlan.toString
-      plan should include("GroupedTopKFinal")
-      // the external (spilling) sort the final pass demands
-      plan should include regex "Sort \\[g"
-    } finally spark.conf.unset(GroupedTopKExec.SortFinalConf)
-  }
-
-  test("sortFinal composes with the partial flush cap") {
-    spark.conf.set(GroupedTopKExec.SortFinalConf, "true")
-    spark.conf.set(GroupedTopKExec.MaxGroupsConf, "1")
-    try {
-      val topk = TopK.perGroup(data, Seq(col("g")),
-        Seq(col("v").desc, col("id")), 5)
-      sortedRows(topk) shouldBe sortedRows(windowed(5))
-    } finally {
-      spark.conf.unset(GroupedTopKExec.SortFinalConf)
-      spark.conf.unset(GroupedTopKExec.MaxGroupsConf)
-    }
   }
 
   test("opt-in rewrite: the window row_number shape plans to GroupedTopKExec") {

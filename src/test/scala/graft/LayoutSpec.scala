@@ -5,9 +5,8 @@ import java.nio.file.Files
 import org.apache.spark.sql.functions._
 
 import graft.operators.Scale
-import graft.sources.OrcTables
 
-class LayoutAndOrcSpec extends SparkSpec {
+class LayoutSpec extends SparkSpec {
   import spark.implicits._
 
   test("writeRangeLayout: files hold disjoint, sorted value ranges") {
@@ -28,24 +27,5 @@ class LayoutAndOrcSpec extends SparkSpec {
     // nothing lost in the re-layout
     spark.read.parquet(dir).as[(Long, Long)].collect().toSeq.sorted shouldBe
       df.as[(Long, Long)].collect().toSeq.sorted
-  }
-
-  test("ORC round-trips and pushes filters to the scan") {
-    val dir = Files.createTempDirectory("graft_orc").toString
-    val df = Seq((1L, "a", 1.5), (2L, "b", 2.5), (3L, "c", 3.5))
-      .toDF("id", "name", "score")
-    OrcTables.write(df, dir)
-
-    val back = OrcTables.read(spark, dir)
-    back.collect().toSet shouldBe df.collect().toSet
-
-    val filtered = back.filter(col("id") > 1L).select("id", "name")
-    val plan = filtered.queryExecution.executedPlan.toString
-    plan should include("PushedFilters")
-    plan should include("GreaterThan(id,1)")
-    // column pruning: score not read
-    plan should include("struct<id:bigint,name:string>")
-    filtered.as[(Long, String)].collect().toSeq.sorted shouldBe
-      Seq((2L, "b"), (3L, "c"))
   }
 }

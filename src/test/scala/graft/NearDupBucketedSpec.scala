@@ -137,14 +137,6 @@ class NearDupBucketedSpec extends SparkSpec {
       js should not be empty
       all(js) shouldBe 0
     }
-    // opt-out: manageSpjConfs=false leaves the caller's confs alone
-    withSQLConf(
-      NearDupIndex.ManageSpjConfsKey -> "false",
-      "spark.sql.requireAllClusterKeysForCoPartition" -> "true") {
-      NearDupIndex.candidatePairsFor(spark, cat, "ns", "bkt3", "b1")
-      spark.conf.get("spark.sql.requireAllClusterKeysForCoPartition")
-        .shouldBe("true")
-    }
   }
 
   test("a reader racing batch replays only ever sees old-or-new " +

@@ -59,20 +59,16 @@ object PropertySpec extends Properties("graft") {
       out == bruteTopK(rows, k)
     }
 
-  property("GroupedTopK == brute force (sort final + flush cap 1)") =
+  property("GroupedTopK == brute force (flush cap 1)") =
     Prop.forAll(topkGen) { case (raw, k) =>
       val rows = raw.zipWithIndex.map { case ((g, v), i) => (g, v, i.toLong) }
-      spark.conf.set(graft.plans.GroupedTopKExec.SortFinalConf, "true")
       spark.conf.set(graft.plans.GroupedTopKExec.MaxGroupsConf, "1")
       try {
         val out = graft.operators.TopK.perGroup(rows.toDF("g", "v", "id"),
             Seq(col("g")), Seq(col("v").desc, col("id")), k)
           .collect().map(r => (r.getInt(0), r.getInt(1), r.getLong(2))).toSet
         out == bruteTopK(rows, k)
-      } finally {
-        spark.conf.unset(graft.plans.GroupedTopKExec.SortFinalConf)
-        spark.conf.unset(graft.plans.GroupedTopKExec.MaxGroupsConf)
-      }
+      } finally spark.conf.unset(graft.plans.GroupedTopKExec.MaxGroupsConf)
     }
 
   property("rolling ROWS sum equals brute-force recomputation") =

@@ -1,5 +1,8 @@
 package graft
 
+import java.io.File
+
+import com.fasterxml.jackson.databind.ObjectMapper
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
 import org.apache.spark.sql.functions._
@@ -8,8 +11,13 @@ import org.apache.spark.sql.functions._
   * metrics (rowsEmitted / rowsFiltered) on the graftcsv source. */
 class QuirkCsvLimitMetricsSpec extends SparkSpec {
 
-  private val csv = "/root/reference/Project1/superstore.csv"
-  private val totalRows = 9994L
+  // the committed day-1 extract (TESTDATA.md) and its ground-truth line
+  // count from the generator
+  private def resource(name: String): String =
+    new File(getClass.getResource(s"/superstore/$name").toURI).getPath
+  private val csv = resource("day1.csv")
+  private val totalRows = new ObjectMapper()
+    .readTree(new File(resource("truth.json"))).at("/day1/lines").asLong
 
   private def graft(opts: (String, String)*): DataFrame =
     opts.foldLeft(spark.read.format("graftcsv"))((r, kv) =>
@@ -41,14 +49,17 @@ class QuirkCsvLimitMetricsSpec extends SparkSpec {
   }
 
   test("pushed limit stops each split early; Spark's Limit stays correct") {
-    // ~16 splits of 128 KiB; limit 7 => each split parses <= 7 rows
-    val df = graft("maxSplitBytes" -> "131072").limit(7)
+    // splits of 8 KiB; limit 7 => each split parses <= 7 rows
+    val opt = "maxSplitBytes" -> "8192"
+    val splits = graft(opt).rdd.getNumPartitions
+    splits should be > 1
+    val df = graft(opt).limit(7)
     df.queryExecution.executedPlan.toString should
       include("PushedLimit: LIMIT 7 (per split)")
     df.collect().length shouldBe 7
     val emitted = metric(df, "rowsEmitted")
     emitted should be >= 7L
-    emitted should be <= (16L * 7L)
+    emitted should be <= (splits * 7L)
   }
 
   test("rowsFiltered counts reader-side drops from pushed filters") {

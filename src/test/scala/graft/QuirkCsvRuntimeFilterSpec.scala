@@ -1,5 +1,7 @@
 package graft
 
+import java.io.File
+
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -12,7 +14,9 @@ import org.apache.spark.sql.functions._
 class QuirkCsvRuntimeFilterSpec extends SparkSpec {
   import spark.implicits._
 
-  private val csv = "/root/reference/Project1/superstore.csv"
+  // the committed day-1 extract (TESTDATA.md)
+  private val csv =
+    new File(getClass.getResource("/superstore/day1.csv").toURI).getPath
 
   private def fact: DataFrame =
     spark.read.format("graftcsv").load(csv)

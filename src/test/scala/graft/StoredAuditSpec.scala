@@ -91,11 +91,14 @@ class StoredAuditSpec extends SparkSpec {
     audit().toSeq shouldBe computed().toSeq
     audit().getLong(1) shouldBe 0L
 
-    // live (un-pinned) serves take the computed fallback and agree
-    withSQLConf(NearDupIndex.SnapshotServeKey -> "false") {
-      pairsOf(NearDupIndex.allCandidatePairs(spark, cat, "ns", "aud")) shouldBe
-        pairsOf(twin)
-    }
+    // a pinned version with no stored audit row takes the computed
+    // fallback (counting over the pinned band frame) and agrees
+    val v = graft.sources.QuirkCsvVersions.currentVersionOf(spark, cat,
+      "ns.aud_bands")
+    spark.sql(s"DELETE FROM $cat.ns.aud_audit WHERE v = '$v'")
+    val fallback = NearDupIndex.allCandidatePairs(spark, cat, "ns", "aud")
+    countingAggsOver(fallback, "_bands") should be > 0
+    pairsOf(fallback) shouldBe pairsOf(twin)
   }
 
   test("ivf semanticDupPairs oversized guard counts the PINNED frame " +
